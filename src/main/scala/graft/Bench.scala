@@ -56,7 +56,8 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup table $t failed: ${e.getMessage}") }
     }
     // t05 warms the explode/two-level-agg simhash pipeline (codegen +
     // JIT) that t05/t06 share — without it, whichever of the two runs
@@ -119,7 +120,8 @@ object Bench {
     warmups.filter(selected.contains).foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).write.format("noop")
         .mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup query $n failed: ${e.getMessage}") }
     }
     // Each query is timed at least twice and the MIN reported (a third
     // sample if the best is still >1 s): on a shared sandbox a single
@@ -470,19 +472,20 @@ object Bench {
     spark.stop()
     // The stdout copy carries the per-query map (r21 verdict ask #2:
     // PERF's per-query comparison read n_common=0 because the printed
-    // line had only the total). The r10-era concern — a bounded
-    // log-tail capture truncating a long line mid-JSON — is mitigated
-    // by printing the short headline line FIRST and the full line
-    // LAST: a parser that takes the final line gets the per-query map,
-    // and if a capture window clips it, the preceding short line still
-    // parses. Samples/spread/layout stay file-only (they would triple
-    // the line again).
+    // line had only the total) on a long line printed FIRST, and the
+    // short headline LAST. A bounded log-tail capture keeps the END of
+    // the output (r22's 2000-char capture started mid-map when the long
+    // line came last), so the final line — the one a parser takes — is
+    // always the complete headline; the per-query map precedes it when
+    // the window is wide enough, and the file always holds it.
+    // Samples/spread/layout stay file-only (they would triple the line
+    // again).
     val shortFailed = failed.map { case (k, _) =>
       "\"" + k.takeWhile(_ != '_') + "\"" }.mkString("[", ",", "]")
     val loadRatio = if (probes.nonEmpty && probes.min > 0) probes.max / probes.min else 1.0
     println(
-      s"""{"metric":"total","value":${num3(total)},"unit":"sec","nqueries":${results.size},"failed":$shortFailed,"load":${num3(loadRatio)},"sf":"$sfDir"}""")
-    println(
       s"""{"metric":"total","value":${num3(total)},"unit":"sec","nqueries":${results.size},"queries":$qs,"failed":$shortFailed,"load":${num3(loadRatio)},"sf":"$sfDir"}""")
+    println(
+      s"""{"metric":"total","value":${num3(total)},"unit":"sec","nqueries":${results.size},"failed":$shortFailed,"load":${num3(loadRatio)},"sf":"$sfDir"}""")
   }
 }

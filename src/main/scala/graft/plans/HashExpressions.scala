@@ -631,19 +631,22 @@ object MergePair {
   * doc_id)` window (a full-posting corpus shuffle + sort) and the
   * anti-join both disappear from the pair generator. The right child
   * is expected foldable (a scalar subquery / literal); eval cost is
-  * O(n log h) per row, no per-row set construction. */
+  * O(n log h) per row, no per-row set construction. Both arrays must
+  * declare `containsNull = false` (the eval reads slots with `getLong`,
+  * no null check); its one caller's inputs do — `array_distinct` over a
+  * `transform` of non-null hashes, and `sort_array(collect_list(...))`. */
 case class ArrayLongsNotInSorted(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   override def dataType: DataType = left.dataType
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(t: DataType) = t match {
-      case org.apache.spark.sql.types.ArrayType(LongType, _) => true
+      case org.apache.spark.sql.types.ArrayType(LongType, false) => true
       case _ => false
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+      s"$prettyName expects two array<bigint> arguments without null " +
+        s"elements, got ${left.dataType}, ${right.dataType}")
   }
   override def prettyName: String = "array_longs_not_in_sorted"
 

@@ -993,7 +993,7 @@ object PhraseSearch {
       val compacted = segHasData(spark, s"$dir/$pSeg")
       val lSeg = m.nextSeg(LEXICON)
       if (compacted)
-        spark.read.parquet(s"$dir/$pSeg").select(col("tok"), col("bucket"))
+        Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
           .distinct()
           .repartitionByRange(col("tok")).sortWithinPartitions("tok")
           .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1081,7 +1081,7 @@ object PhraseSearch {
       val kept = segHasData(spark, s"$dir/$pSeg")
       val lSeg = m.nextSeg(LEXICON)
       if (kept)
-        spark.read.parquet(s"$dir/$pSeg").select(col("tok"), col("bucket"))
+        Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
           .distinct()
           .repartitionByRange(col("tok")).sortWithinPartitions("tok")
           .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1159,7 +1159,7 @@ object PhraseSearch {
           val kept = segHasData(spark, s"$dir/$pSeg")
           val lSeg = m.nextSeg(LEXICON)
           if (kept)
-            spark.read.parquet(s"$dir/$pSeg").select(col("tok"), col("bucket"))
+            Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
               .distinct()
               .repartitionByRange(col("tok")).sortWithinPartitions("tok")
               .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1229,7 +1229,7 @@ object PhraseSearch {
         .repartitionByRange(col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$out/$DOCLEN/seg-$ver")
-      spark.read.parquet(s"$out/$POSTINGS/seg-$ver")
+      Manifest.readSegment(spark, s"$out/$POSTINGS/seg-$ver")
         .select(col("tok"), col("bucket")).distinct()
         .repartitionByRange(col("tok")).sortWithinPartitions("tok")
         .write.mode("overwrite").parquet(s"$out/$LEXICON/seg-$ver")

@@ -171,4 +171,35 @@ class HashExprSpec extends SparkSpec {
     assert(viaSql2.getLong(0) === 2L)
     assert(viaSql2.isNullAt(1))
   }
+
+  test("array_longs_not_in_sorted takes only arrays without null elements") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def notIn(a: org.apache.spark.sql.Column, hot: org.apache.spark.sql.Column) =
+      Bridge.column(graft.plans.ArrayLongsNotInSorted(
+        Bridge.expression(a), Bridge.expression(hot)))
+    // both inputs of its one caller (TextOps.pairStatsImpl) declare
+    // containsNull = false, so rejecting null-capable arrays costs it
+    // nothing
+    val docs = Seq((1L, "a b c d a b c"), (2L, "a b")).toDF("doc_id", "text")
+    val sids = docs.select(TextOps.sidArray($"text", 3).as("s"))
+    assert(sids.schema("s").dataType === ArrayType(LongType, containsNull = false))
+    val hot = TextOps.shingleIds(docs, 3)
+      .agg(sort_array(collect_list($"sid")).as("hot"))
+    assert(hot.schema("hot").dataType === ArrayType(LongType, containsNull = false))
+    assert(sids.crossJoin(hot).select(size(notIn($"s", $"hot"))).as[Int].collect()
+      .toSeq === Seq(0, 0))
+    // non-null slots: the left order is kept, hot elements drop out
+    val one = spark.range(1).select(
+      notIn(array(lit(5L), lit(1L), lit(3L), lit(1L)), array(lit(1L), lit(4L))).as("k"))
+    assert(one.as[Seq[Long]].head() === Seq(5L, 3L))
+    // a null-capable element type on either side fails analysis loudly
+    // instead of reading a null slot as 0
+    val nullable = array(lit(1L), lit(null).cast("long"))
+    Seq(notIn(nullable, array(lit(1L))), notIn(array(lit(1L)), nullable)).foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).select(c).collect())
+      assert(e.getMessage.contains("without null elements"), e.getMessage)
+    }
+  }
 }

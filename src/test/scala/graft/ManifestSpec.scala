@@ -24,6 +24,11 @@ class ManifestSpec extends SparkSpec {
   private lazy val toks = docs.select(col("doc_id"),
     posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
 
+  /** 20 8-d vectors for the IVF plane. */
+  private lazy val embs = (1L to 20L).map { id =>
+    (id, Array.tabulate(8)(d => ((id * 7 + d * 13) % 7 - 3).toFloat), 0)
+  }.toDF("vec_id", "embedding", "label")
+
   private def freshDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
 
@@ -108,9 +113,6 @@ class ManifestSpec extends SparkSpec {
 
   test("crash injection (IVF plane): a refresh killed before its commit changes nothing") {
     import graft.similarity.IntKMeans
-    val embs = (1L to 20L).map { id =>
-      (id, Array.tabulate(8)(d => ((id * 7 + d * 13) % 7 - 3).toFloat), 0)
-    }.toDF("vec_id", "embedding", "label")
     val dir = freshDir("mf_ivfcrash_")
     IntKMeans.writeIndex(embs, dir, nlist = 2)
     IntKMeans.deleteFromIndex(Seq(3L).toDF("vec_id"), dir)
@@ -221,9 +223,6 @@ class ManifestSpec extends SparkSpec {
         .collect().toSet)
     // IVF mirror
     import graft.similarity.IntKMeans
-    val embs = (1L to 20L).map { id =>
-      (id, Array.tabulate(8)(d => ((id * 7 + d * 13) % 7 - 3).toFloat), 0)
-    }.toDF("vec_id", "embedding", "label")
     val vd = freshDir("mf_auto_v_")
     IntKMeans.writeIndex(embs.filter($"vec_id" <= 10), vd, nlist = 2)
     IntKMeans.appendIndex(embs.filter($"vec_id" > 10), vd)
@@ -253,5 +252,144 @@ class ManifestSpec extends SparkSpec {
       assert(segs === m.segs(comp).toSet,
         s"$comp holds segments the manifest does not reference: $segs")
     }
+  }
+
+  // ---------------- segment resolver --------------------------------
+
+  /** Spark jobs `body` starts on this thread, counted by the status
+    * tracker under a fresh job group. The listener bus records jobs in
+    * order, so once a later sentinel job (its own group) is visible,
+    * every job `body` started is too. */
+  private def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = s"resolver-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(tag, "build served reads", interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$tag-sentinel", "listener barrier", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$tag-sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$tag-sentinel").nonEmpty,
+      "the sentinel job never reached the status tracker")
+    sc.statusTracker.getJobIdsForGroup(tag).length
+  }
+
+  private val boolQuery = "\"quick brown\" AND NOT cat"
+
+  /** The four served read kinds the index planes answer, as frames. */
+  private def servedReads(s: org.apache.spark.sql.SparkSession, pdir: String,
+                          vdir: String): Seq[org.apache.spark.sql.DataFrame] = Seq(
+    PhraseSearch.servedPhraseHits(s, pdir, Seq("quick", "brown")),
+    PhraseSearch.servedSearch(s, pdir, boolQuery),
+    PhraseSearch.servedBm25TopK(s, pdir, Seq("quick", "brown", "turtle"), k = 3),
+    graft.similarity.IntKMeans.servedTopK(s, vdir,
+      embs.filter(col("vec_id") === 1L).select("vec_id", "embedding"), k = 5, nprobe = 2))
+
+  private def answers(reads: Seq[org.apache.spark.sql.DataFrame]): Seq[Set[String]] =
+    reads.map(_.collect().map(_.toString).toSet)
+
+  test("resolver: building the same served reads again on one snapshot starts no Spark job") {
+    import graft.similarity.IntKMeans
+    val pdir = freshDir("mf_res_jobs_")
+    val vdir = freshDir("mf_res_jobs_v_")
+    PhraseSearch.writeIndex(toks.filter(col("doc_id") =!= 4L), pdir, nBuckets = 8)
+    PhraseSearch.appendIndex(toks.filter(col("doc_id") === 4L), pdir)
+    PhraseSearch.deleteFromIndex(Seq(2L).toDF("doc_id"), pdir)
+    IntKMeans.writeIndex(embs.filter(col("vec_id") <= 15L), vdir, nlist = 2)
+    IntKMeans.deleteFromIndex(Seq(3L).toDF("vec_id"), vdir)
+    // the first build resolves every live segment (schema inference is
+    // a job each), which proves the counter sees construction jobs
+    val cold = jobsStartedBy(servedReads(spark, pdir, vdir))
+    assert(cold > 0, "the first build should resolve segments with Spark jobs")
+    Seq("phrase", "boolean with NOT", "BM25", "kNN").zipWithIndex.foreach { case (kind, i) =>
+      val warm = jobsStartedBy(servedReads(spark, pdir, vdir)(i))
+      assert(warm === 0, s"rebuilding the served $kind read started $warm Spark jobs")
+    }
+  }
+
+  test("resolver: served answers equal a fresh read through every maintenance op") {
+    import graft.similarity.IntKMeans
+    val pdir = freshDir("mf_res_life_")
+    val vdir = freshDir("mf_res_life_v_")
+    // a new session shares nothing with the resolver's entries for
+    // `spark`, so its reads resolve every segment with spark.read.parquet
+    def check(step: String): Unit = {
+      val got = answers(servedReads(spark, pdir, vdir))
+      val fresh = answers(servedReads(spark.newSession(), pdir, vdir))
+      assert(got === fresh, s"after $step")
+      assert(got.head.nonEmpty, s"vacuous phrase read after $step")
+    }
+    PhraseSearch.writeIndex(toks.filter(col("doc_id") % 2 === 0), pdir, nBuckets = 8)
+    IntKMeans.writeIndex(embs.filter(col("vec_id") <= 10L), vdir, nlist = 2)
+    check("build")
+    PhraseSearch.appendIndex(toks.filter(col("doc_id") % 2 === 1), pdir)
+    IntKMeans.appendIndex(embs.filter(col("vec_id") > 10L), vdir)
+    check("append")
+    PhraseSearch.deleteFromIndex(Seq(2L).toDF("doc_id"), pdir)
+    IntKMeans.deleteFromIndex(Seq(1L, 2L).toDF("vec_id"), vdir)
+    check("delete")
+    PhraseSearch.rollbackIndex(spark, pdir, 2L)
+    IntKMeans.rollbackIndex(spark, vdir, 2L)
+    check("rollback")
+    PhraseSearch.deleteFromIndex(Seq(1L).toDF("doc_id"), pdir)
+    IntKMeans.deleteFromIndex(Seq(4L).toDF("vec_id"), vdir)
+    PhraseSearch.vacuumIndex(spark, pdir, 3L)
+    IntKMeans.vacuumIndex(spark, vdir, 3L)
+    check("vacuum")
+    PhraseSearch.compactIndex(spark, pdir)
+    IntKMeans.compactIndex(spark, vdir)
+    check("compact")
+    // the phrase answers are also the corpus truth: the rollback undid
+    // doc 2's delete, the vacuum reclaimed doc 1
+    val live = toks.filter(col("doc_id") =!= 1L)
+    assert(PhraseSearch.servedPhraseHits(spark, pdir, Seq("quick", "brown"))
+      .collect().toSet ===
+      PhraseSearch.phraseHits(live, Seq("quick", "brown")).collect().toSet)
+  }
+
+  test("resolver: an index deleted and rebuilt under the same path serves the new content") {
+    val dir = freshDir("mf_res_rebuild_")
+    PhraseSearch.writeIndex(toks, dir, nBuckets = 8)
+    assert(PhraseSearch.servedPhraseHits(spark, dir, Seq("quick", "brown"))
+      .collect().nonEmpty)
+    val seg = s"$dir/${Manifest.load(spark, dir).segs("postings").head}"
+    assert(Manifest.isResolved(spark, seg))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val other = Seq((7L, "quick brown owl"), (8L, "brown quick owl"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
+    PhraseSearch.writeIndex(other, dir, nBuckets = 8)
+    // same manifest version, so the same segment path as before
+    assert(s"$dir/${Manifest.load(spark, dir).segs("postings").head}" === seg)
+    assert(PhraseSearch.servedPhraseHits(spark, dir, Seq("quick", "brown"))
+      .collect().toSet ===
+      PhraseSearch.phraseHits(other, Seq("quick", "brown")).collect().toSet)
+    assert(PhraseSearch.servedSearch(spark, dir, "owl").collect().map(_.getLong(0)).toSet ===
+      Set(7L, 8L))
+  }
+
+  test("resolver: gc drops the entries of the segments a compaction deleted") {
+    val dir = freshDir("mf_res_gc_")
+    PhraseSearch.writeIndex(toks.filter(col("doc_id") % 2 === 0), dir, nBuckets = 8)
+    PhraseSearch.appendIndex(toks.filter(col("doc_id") % 2 === 1), dir)
+    PhraseSearch.deleteFromIndex(Seq(4L).toDF("doc_id"), dir)
+    PhraseSearch.servedBm25TopK(spark, dir, Seq("quick", "turtle"), k = 3).collect()
+    val before = Manifest.load(spark, dir)
+    val old = Seq("postings", "doclen", "tombstones").flatMap(before.segs)
+      .map(r => s"$dir/$r")
+    assert(old.size === 5)
+    old.foreach(p => assert(Manifest.isResolved(spark, p), s"$p was never resolved"))
+    PhraseSearch.compactIndex(spark, dir)
+    old.foreach(p => assert(!Manifest.isResolved(spark, p), s"gc left an entry for $p"))
+    // a reader still holding the reclaimed snapshot fails as an
+    // unresolved read of a missing dir does
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Manifest.readComponent(spark, dir, before, "postings"))
+    assert(e.getCondition === "PATH_NOT_FOUND", e.getMessage)
+    // the lexicon rebuild read the new postings segment through the
+    // resolver, so the first served read after the compaction finds it
+    val after = Manifest.load(spark, dir)
+    assert(Manifest.isResolved(spark, s"$dir/${after.segs("postings").head}"))
   }
 }
