@@ -28,7 +28,7 @@ object LayoutAudit {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.sources.Tables
     val pre = "graft_la_"
-    def pq(n: String) = spark.read.parquet(s"$sfDir/$n.parquet")
+    def pq(n: String) = Tables.load(spark, sfDir, n)
     Tables.writeBucketed(pq("lineitem"), pre + "lineitem", "l_orderkey",
       8, Seq("l_orderkey", "l_linenumber"))
     Tables.writeBucketed(pq("orders"), pre + "orders", "o_orderkey",

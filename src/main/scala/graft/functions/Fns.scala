@@ -28,16 +28,7 @@ object Fns {
     inter / union
   }
 
-  /** a entirely left of b (panels_rekall.py:48-51 left_of edge). */
-  def leftOf(ax2: Column, bx1: Column): Column = ax2 <= bx1
-
-  /** |a-b| <= eps (panels_rekall.py same_value edge). */
-  def sameValue(a: Column, b: Column, eps: Double): Column = abs(a - b) <= eps
-
   // ---------------- time ---------------------------------------------
-  /** frame number -> seconds given fps (commercial_detection_rekall.py:42-44). */
-  def frameToSecond(frame: Column, fps: Column): Column = frame / fps
-  def secondToFrame(sec: Column, fps: Column): Column = floor(sec * fps)
 
   /** events.ts -> epoch seconds, whatever the column's physical dtype.
     * The canonical parquet has shipped `ts` both as int64 nanoseconds
@@ -96,14 +87,10 @@ object Fns {
     def y(kps: Column, idx: Int): Column = element_at(kps, idx * 3 + 2)
     def score(kps: Column, idx: Int): Column = element_at(kps, idx * 3 + 3)
 
-    /** The pose / face / left-hand / right-hand sub-arrays
+    /** The pose / face sub-arrays
       * (base_models.py:318-329 pose/face/hand_keypoints). */
     def pose(kps: Column): Column = slice(kps, 1, PoseCount * 3)
     def face(kps: Column): Column = slice(kps, PoseCount * 3 + 1, FaceCount * 3)
-    def handLeft(kps: Column): Column =
-      slice(kps, (PoseCount + FaceCount) * 3 + 1, HandCount * 3)
-    def handRight(kps: Column): Column =
-      slice(kps, (PoseCount + FaceCount + HandCount) * 3 + 1, HandCount * 3)
 
     /** Both wrists above the nose (image y grows downward) —
       * unused_queries.py:41-42 hands_above_head. */

@@ -1,11 +1,7 @@
 package graft.index
 
-import java.io.FileNotFoundException
-import java.util.concurrent.ConcurrentHashMap
-
+import graft.sources.FileRelations
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.sources.BaseRelation
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** One immutable SNAPSHOT of a persisted index: which segment
@@ -188,7 +184,7 @@ object Manifest {
         val rel = s"$component/${st.getPath.getName}"
         if (!live.contains(rel)) {
           fs.delete(st.getPath, true)
-          resolved.remove(fs.makeQualified(st.getPath).toString)
+          FileRelations.evict(spark, st.getPath)
         }
       }
     }
@@ -228,70 +224,18 @@ object Manifest {
     * branch keeps its own partition pruning — compaction restores the
     * single-scan shape.
     *
-    * Each segment goes through [[readSegment]], which resolves it once
-    * per session. That relies on the invariant [[commit]] and [[gc]]
-    * keep: a committed segment dir is IMMUTABLE. Maintenance ops write
-    * new `seg-V` dirs and publish them with one manifest rename; no op
-    * appends to, rewrites or renames a segment dir a manifest names,
-    * and only gc deletes one. */
+    * Each segment is read through the engine's one file-relation
+    * resolver, [[graft.sources.FileRelations.read]], which resolves it
+    * once per session. That relies on the invariant [[commit]] and
+    * [[gc]] keep: a committed segment dir is IMMUTABLE. Maintenance ops
+    * write new `seg-V` dirs and publish them with one manifest rename;
+    * no op appends to, rewrites or renames a segment dir a manifest
+    * names, and only gc deletes one (and drops its resolver entry). */
   def readComponent(spark: SparkSession, indexDir: String, m: Manifest,
                     component: String): Option[DataFrame] = {
     val paths = m.segs(component).map(r => s"$indexDir/$r")
     if (paths.isEmpty) None
-    else Some(paths.map(readSegment(spark, _)).reduce(_.unionByName(_)))
-  }
-
-  /** A segment dir resolved by `spark`: the dir's modification time
-    * when it was resolved and its parquet relation (file listing,
-    * partition spec, schema). Metadata only — no data is cached. */
-  private final case class Resolved(spark: SparkSession, mtime: Long,
-                                    rel: BaseRelation)
-
-  /** Resolved segment dirs by qualified path. A miss costs one
-    * `spark.read.parquet`: it lists the dir (a Spark listing job once it
-    * has more than 32 `bucket=` subdirs) and infers the parquet schema
-    * (another job). [[gc]] drops the entries of the dirs it deletes. */
-  private val resolved = new ConcurrentHashMap[String, Resolved]()
-
-  /** One segment dir as a frame, resolved once per session: a hit costs
-    * one `getFileStatus` and starts no Spark job, and every call gets a
-    * fresh relation node (fresh attribute ids, so a plan may read the
-    * same segment twice). The entry is keyed by the dir's modification
-    * time too, so a dir wiped and rebuilt under the same name (a fresh
-    * index over an old path, a crashed writer's staged `seg-V`
-    * overwritten by its successor) is resolved again. A missing dir
-    * fails as `spark.read.parquet` does. */
-  private[graft] def readSegment(spark: SparkSession, path: String): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      try Some(fs.getFileStatus(p))
-      catch { case _: FileNotFoundException => None }
-    status match {
-      case None => spark.read.parquet(path)
-      case Some(st) =>
-        val key = fs.makeQualified(p).toString
-        val rel = Option(resolved.get(key))
-          .filter(r => (r.spark eq spark) && r.mtime == st.getModificationTime)
-          .map(_.rel)
-          .getOrElse {
-            val r = spark.read.parquet(path).queryExecution.analyzed match {
-              case lr: LogicalRelation => lr.relation
-              case other => throw new IllegalStateException(
-                s"segment $path resolved to ${other.nodeName}, not a file relation")
-            }
-            resolved.put(key, Resolved(spark, st.getModificationTime, r))
-            r
-          }
-        spark.baseRelationToDataFrame(rel)
-    }
-  }
-
-  /** Whether the resolver holds an entry for the segment dir at `path`. */
-  private[graft] def isResolved(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    resolved.containsKey(fs.makeQualified(p).toString)
+    else Some(paths.map(FileRelations.read(spark, _)).reduce(_.unionByName(_)))
   }
 
   /** The live snapshot as a QUERYABLE one-row-per-component frame:

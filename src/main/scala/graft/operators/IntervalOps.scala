@@ -204,12 +204,8 @@ object IntervalOps {
     /** a strictly after b, gap in [0, maxDist]. */
     def after(maxDist: Long)(c: Cols): Column =
       (col(c.start) - col("__be")).between(0, maxDist)
-    def equalPred(c: Cols): Column =
-      col("__bs") === col(c.start) && col("__be") === col(c.end)
     def orPred(ps: (Cols => Column)*)(c: Cols): Column =
       ps.map(_(c)).reduce(_ || _)
-    def andPred(ps: (Cols => Column)*)(c: Cols): Column =
-      ps.map(_(c)).reduce(_ && _)
   }
 
   /** R17 macro: keep short intervals only when within `dist` of another

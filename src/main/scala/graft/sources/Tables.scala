@@ -17,6 +17,13 @@ object Tables {
   /** S2: parquet load by table key. Column pruning + predicate pushdown
     * happen in Catalyst; callers select/filter freely.
     *
+    * A table file is resolved once per session through
+    * [[FileRelations.read]], keyed by its path, modification time and
+    * length: building a query from already-loaded tables starts no
+    * Spark job, a file rewritten in place is detected and resolved
+    * again, and only metadata (schema, file listing) is cached, never
+    * rows. A missing file fails as `spark.read.parquet` does.
+    *
     * The `catalog:<prefix>` scheme resolves `name` to the session
     * catalog table `<prefix><name>` instead of a parquet path, so the
     * SAME query functions run unchanged off bucketed/sorted catalog
@@ -26,7 +33,7 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (sfDir.startsWith("catalog:"))
       spark.table(sfDir.stripPrefix("catalog:") + name)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else FileRelations.read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.sources.FileRelations
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,10 +35,6 @@ object PhraseSearch {
       acc.join(nxt, Seq("doc_id", "pos"), "left_semi")
     }
   }
-
-  /** Docs containing the phrase at least once. */
-  def docsWithPhrase(toks: DataFrame, phrase: Seq[String]): DataFrame =
-    phraseHits(toks, phrase).select("doc_id").distinct()
 
   /** Query-language slot semantics: a trailing UNESCAPED `*` (on a
     * 2+ char word) makes the slot a PREFIX pattern; anything else
@@ -993,7 +990,7 @@ object PhraseSearch {
       val compacted = segHasData(spark, s"$dir/$pSeg")
       val lSeg = m.nextSeg(LEXICON)
       if (compacted)
-        Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
+        FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
           .distinct()
           .repartitionByRange(col("tok")).sortWithinPartitions("tok")
           .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1081,7 +1078,7 @@ object PhraseSearch {
       val kept = segHasData(spark, s"$dir/$pSeg")
       val lSeg = m.nextSeg(LEXICON)
       if (kept)
-        Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
+        FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
           .distinct()
           .repartitionByRange(col("tok")).sortWithinPartitions("tok")
           .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1159,7 +1156,7 @@ object PhraseSearch {
           val kept = segHasData(spark, s"$dir/$pSeg")
           val lSeg = m.nextSeg(LEXICON)
           if (kept)
-            Manifest.readSegment(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
+            FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
               .distinct()
               .repartitionByRange(col("tok")).sortWithinPartitions("tok")
               .write.mode("overwrite").parquet(s"$dir/$lSeg")
@@ -1229,7 +1226,7 @@ object PhraseSearch {
         .repartitionByRange(col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$out/$DOCLEN/seg-$ver")
-      Manifest.readSegment(spark, s"$out/$POSTINGS/seg-$ver")
+      FileRelations.read(spark, s"$out/$POSTINGS/seg-$ver")
         .select(col("tok"), col("bucket")).distinct()
         .repartitionByRange(col("tok")).sortWithinPartitions("tok")
         .write.mode("overwrite").parquet(s"$out/$LEXICON/seg-$ver")

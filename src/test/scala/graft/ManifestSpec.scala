@@ -1,6 +1,7 @@
 package graft
 
 import graft.index.Manifest
+import graft.sources.FileRelations
 import graft.text.PhraseSearch
 import org.apache.spark.sql.functions._
 
@@ -256,25 +257,6 @@ class ManifestSpec extends SparkSpec {
 
   // ---------------- segment resolver --------------------------------
 
-  /** Spark jobs `body` starts on this thread, counted by the status
-    * tracker under a fresh job group. The listener bus records jobs in
-    * order, so once a later sentinel job (its own group) is visible,
-    * every job `body` started is too. */
-  private def jobsStartedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = s"resolver-${java.util.UUID.randomUUID}"
-    sc.setJobGroup(tag, "build served reads", interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$tag-sentinel", "listener barrier", interruptOnCancel = false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup(s"$tag-sentinel").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(s"$tag-sentinel").nonEmpty,
-      "the sentinel job never reached the status tracker")
-    sc.statusTracker.getJobIdsForGroup(tag).length
-  }
-
   private val boolQuery = "\"quick brown\" AND NOT cat"
 
   /** The four served read kinds the index planes answer, as frames. */
@@ -354,7 +336,7 @@ class ManifestSpec extends SparkSpec {
     assert(PhraseSearch.servedPhraseHits(spark, dir, Seq("quick", "brown"))
       .collect().nonEmpty)
     val seg = s"$dir/${Manifest.load(spark, dir).segs("postings").head}"
-    assert(Manifest.isResolved(spark, seg))
+    assert(FileRelations.isResolved(spark, seg))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     val other = Seq((7L, "quick brown owl"), (8L, "brown quick owl"))
       .toDF("doc_id", "text")
@@ -379,9 +361,9 @@ class ManifestSpec extends SparkSpec {
     val old = Seq("postings", "doclen", "tombstones").flatMap(before.segs)
       .map(r => s"$dir/$r")
     assert(old.size === 5)
-    old.foreach(p => assert(Manifest.isResolved(spark, p), s"$p was never resolved"))
+    old.foreach(p => assert(FileRelations.isResolved(spark, p), s"$p was never resolved"))
     PhraseSearch.compactIndex(spark, dir)
-    old.foreach(p => assert(!Manifest.isResolved(spark, p), s"gc left an entry for $p"))
+    old.foreach(p => assert(!FileRelations.isResolved(spark, p), s"gc left an entry for $p"))
     // a reader still holding the reclaimed snapshot fails as an
     // unresolved read of a missing dir does
     val e = intercept[org.apache.spark.sql.AnalysisException](
@@ -390,6 +372,6 @@ class ManifestSpec extends SparkSpec {
     // the lexicon rebuild read the new postings segment through the
     // resolver, so the first served read after the compaction finds it
     val after = Manifest.load(spark, dir)
-    assert(Manifest.isResolved(spark, s"$dir/${after.segs("postings").head}"))
+    assert(FileRelations.isResolved(spark, s"$dir/${after.segs("postings").head}"))
   }
 }
