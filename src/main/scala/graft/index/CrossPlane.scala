@@ -53,9 +53,7 @@ object CrossPlane {
           s"version ${before.version + 1} but found ${cur.version} — " +
           "another writer committed since; the event is left applied " +
           "(pendingMismatch will surface any divergence)")
-      val m2 = before.copy(version = cur.version + 1)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
+      VersionedIndex.publish(spark, dir, before.copy(version = cur.version + 1))
     }
 
   /** TAKEDOWN across both planes: tombstone `ids` (one column, `id`)

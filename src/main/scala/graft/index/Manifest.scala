@@ -45,6 +45,9 @@ final case class Manifest(
   /** Next version's segment dir for `component` (relative path). */
   def nextSeg(component: String): String = s"$component/seg-${version + 1}"
 
+  /** This version's own segment dir for `component` (relative path). */
+  def segFor(component: String): String = s"$component/seg-$version"
+
   def withSegAdded(component: String, seg: String): Manifest =
     copy(segments = segments.updated(component, segs(component) :+ seg))
 

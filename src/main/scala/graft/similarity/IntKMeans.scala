@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.index.VersionedIndex.publish
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   * the corpus — and the per-(cell,pos) centroid sums are partial-agg
   * friendly. Iteration count is a fixed small constant (coarse
   * quantizers don't need convergence), so plan depth is bounded. */
-object IntKMeans {
+object IntKMeans extends graft.index.VersionedIndex {
 
   /** Corpus on the int8 grid: (vec_id, label, q) with q an
     * INTEGER-VALUED array<double> (the quantizeInt8 convention —
@@ -182,15 +183,11 @@ object IntKMeans {
     * quantization scale — so serving never refits and a query touches
     * only its probed cells' files. At 100 TB this is the production
     * layout: the index is built once by a batch job and the per-cell
-    * parquet directories are the unit of serve-side I/O. Live
-    * segments, the batch-sequence counter, the retention watermark
-    * and the int8 scale are named by a versioned manifest
-    * ([[graft.index.Manifest]]): every maintenance op stages new
-    * segment dirs and publishes them in ONE atomic manifest commit,
-    * and the writer lease enforces the single-writer contract. */
+    * parquet directories are the unit of serve-side I/O. The manifest
+    * ([[graft.index.Manifest]]) names the live segments and the int8
+    * scale; maintenance follows [[graft.index.VersionedIndex]]. */
   private val VECTORS = "vectors"
   private val CENTROIDS = "centroids"
-  private val TOMBSTONES = "tombstones"
   // optional compressed rank tier (IVF-PQ, [[addPqCodes]])
   private val PQCODES = "pqcodes"
   private val PQBOOK = "pqcodebook"
@@ -198,45 +195,56 @@ object IntKMeans {
   private type SparkSession = org.apache.spark.sql.SparkSession
   private val Manifest = graft.index.Manifest
 
+  // the plane's part of the versioned-row model (graft.index.VersionedIndex)
+  protected val idCol = "vec_id"
+  protected val components = Seq(VECTORS, CENTROIDS)
+  protected val versioned = Seq(VECTORS)
+  protected val idSource = VECTORS
+  protected def rowsOf(spark: SparkSession, dir: String,
+                       m: graft.index.Manifest, c: String): DataFrame =
+    vectorsOf(spark, dir, m)
+
+  /** Vectors: cell-partitioned, each file sorted by vec_id. */
+  protected def writeLayout(c: String, rows: DataFrame, path: String): Unit =
+    rows.repartition(col("cell")).sortWithinPartitions("vec_id")
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** A rewrite destroys or renumbers the rows the PQ codes were
+    * derived from: drop the tier ([[withoutPqTier]]). Centroids and
+    * scale are untouched — the coarse quantizer is frozen across all
+    * maintenance, so it was identical at every snapshot. */
+  protected def afterRewrite(spark: SparkSession, dir: String,
+                             next: graft.index.Manifest): graft.index.Manifest =
+    withoutPqTier(next)
+
   def writeIndex(corpus: DataFrame, dir: String, nlist: Int,
                  iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
     Manifest.withLease(spark, dir) {
-      val (asg, ctr) = fit(corpus, nlist, iters)
       // the corpus max-abs that defined the int8 grid (mirror of
       // Similarity.quantizeInt8's scale): queries must be quantized on
       // the SAME scale at serve time or dot products are meaningless.
       // Double.toString round-trips exactly, so the manifest carries
-      // the bit-identical scale the fit used.
-      val ma = corpus.agg(max(array_max(transform(col("embedding"),
-          x => abs(x.cast("double"))))).as("ma"))
-        .head().getAs[Double]("ma")
-      val ver = Manifest.latest(spark, dir).map(_.version).getOrElse(0L) + 1
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 1L, retention = None,
-        scalars = Map("ma" -> ma.toString),
-        segments = Map(
-          VECTORS -> Vector(s"$VECTORS/seg-$ver"),
-          CENTROIDS -> Vector(s"$CENTROIDS/seg-$ver"),
-          TOMBSTONES -> Vector.empty))
+      // the bit-identical scale the fit used. No rows, no scale and no
+      // quantizer: refused before anything is written.
+      val maRow = corpus.agg(max(array_max(transform(col("embedding"),
+          x => abs(x.cast("double"))))).as("ma")).head()
+      require(!maRow.isNullAt(0), s"IVF build over an empty corpus at $dir — nothing to fit")
+      val ma = maRow.getDouble(0)
+      val (asg, ctr) = fit(corpus, nlist, iters)
+      val next = generation(spark, dir, 1L, Map("ma" -> ma.toString))
       asg.select(col("vec_id"), col("q"), col("cell"))
         .withColumn("seq", lit(0L))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/$VECTORS/seg-$ver")
-      ctr.write.mode("overwrite").parquet(s"$dir/$CENTROIDS/seg-$ver")
-      Manifest.commit(spark, dir, m)
-      Manifest.gc(spark, dir, m)
+        .parquet(s"$dir/${next.segFor(VECTORS)}")
+      ctr.write.mode("overwrite").parquet(s"$dir/${next.segFor(CENTROIDS)}")
+      publish(spark, dir, withStaged(spark, dir, next, Seq(VECTORS, CENTROIDS)))
     }
   }
 
-  // ---- batch sequence numbers: the same versioning the phrase index
-  // carries — every batch of vector rows is stamped with the seq it
-  // was written under (base build = 0, each append = the then-current
-  // counter) and a tombstone is (vec_id, upto): it kills only rows
-  // with seq < upto, so an upsert's re-encoded replacement row
-  // (written AT upto) survives its own id's tombstone. The counter
-  // lives in the manifest, committed atomically with the segment
-  // list; the single-writer contract is enforced by the lease.
+  // Rows are seq-stamped and deleted by tombstone: see
+  // graft.index.VersionedIndex for the versioning, the as-of reads and
+  // the rewrites (compact, rollback, vacuum) this plane inherits.
 
   private def vectorsOf(spark: SparkSession, dir: String,
                         m: graft.index.Manifest): DataFrame =
@@ -250,27 +258,12 @@ object IntKMeans {
       .getOrElse(throw new IllegalStateException(
         s"index at $dir has no centroids — not an IVF layout"))
 
-  private def tombstonesOf(spark: SparkSession, dir: String,
-                           m: graft.index.Manifest): Option[DataFrame] =
-    Manifest.readComponent(spark, dir, m, TOMBSTONES)
-
   /** Quantize `embedding` rows onto the STORED int8 grid — verbatim
     * quantizeInt8 op order, with the manifest's scale inlined as a
     * literal (one driver-side metadata read, no broadcast join). */
   private def quantizeOnStored(df: DataFrame, ma: Double): DataFrame =
     df.withColumn("q", transform(col("embedding"),
       x => round(x.cast("double") * 127.0d / lit(ma))))
-
-  /** True iff the just-written segment dir holds any data (empty
-    * micro-batches must not put schemaless segments in the manifest). */
-  private def segHasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      n != "_SUCCESS" && !n.startsWith(".") && !n.startsWith("_")
-    }
-  }
 
   /** Incremental maintenance (daily-crawl shape): append a NEW batch
     * of vectors to an existing [[writeIndex]] layout WITHOUT refitting
@@ -290,25 +283,15 @@ object IntKMeans {
     * at build time.
     *
     * CONTRACT: batch vec_ids must be disjoint from indexed ones. */
-  def appendIndex(newCorpus: DataFrame, dir: String): Unit = {
-    val spark = newCorpus.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val vSeg = m.nextSeg(VECTORS)
-      appendSeg(spark, dir, m, newCorpus, m.nextSeq, vSeg)
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 1)
-      if (segHasData(spark, s"$dir/$vSeg")) m2 = m2.withSegAdded(VECTORS, vSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
+  def appendIndex(newCorpus: DataFrame, dir: String): Unit =
+    logEvents(newCorpus.sparkSession, dir, None, Some(appendSeg(newCorpus, dir)))
 
   /** Quantize + frozen-centroid assign `newCorpus` and write it as
-    * vector segment `vSeg` stamped with `seq` (shared by append and
+    * `next`'s vector segment stamped with `seq` (shared by append and
     * upsert). */
-  private def appendSeg(spark: SparkSession, dir: String,
-                        m: graft.index.Manifest, newCorpus: DataFrame,
-                        seq: Long, vSeg: String): Unit = {
+  private def appendSeg(newCorpus: DataFrame, dir: String)(
+      m: graft.index.Manifest, seq: Long): Seq[String] = {
+    val spark = newCorpus.sparkSession
     val ctr = broadcast(centroidsOf(spark, dir, m))
     val qv = quantizeOnStored(
         newCorpus.select(col("vec_id"), col("embedding")),
@@ -321,105 +304,24 @@ object IntKMeans {
         first(col("q")).as("q"))
       .select(col("vec_id"), col("q"), lit(seq).as("seq"),
         col("m.cell").as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$vSeg")
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$dir/${m.segFor(VECTORS)}")
+    Seq(VECTORS)
   }
 
   /** UPSERT (the re-encode shape: an embedding-model refresh changed
-    * some already-indexed vectors, plus possibly brand-new ids):
-    * tombstone the batch's vec_ids at the current sequence number S,
-    * then add the re-encoded vectors at S+1 — the tombstone
-    * (vec_id, upto = S) kills every older version (seq < S) while the
-    * replacement rows (seq = S+1) survive it. Both the tombstone
-    * segment and the replacement segment land in ONE manifest commit,
-    * so the upsert is atomic even across its two logical events. The
-    * new embedding is quantized on the STORED scale and assigned to
-    * the frozen coarse quantizer (appendIndex's rule) — it may land
-    * in a DIFFERENT cell than the stale version, which is exactly why
-    * the stale row must die by version, not by rewrite. Upserting an
-    * id the index never held degenerates to a plain append. v34's
-    * oracle proves a stale-then-upserted index indistinguishable from
-    * the frozen-quantizer assignment of the corrected corpus. */
-  def upsertIndex(newCorpus: DataFrame, dir: String): Unit = {
-    val spark = newCorpus.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val tSeg = m.nextSeg(TOMBSTONES)
-      val vSeg = m.nextSeg(VECTORS)
-      newCorpus.select(col("vec_id")).distinct()
-        .withColumn("upto", lit(m.nextSeq))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$tSeg")
-      appendSeg(spark, dir, m, newCorpus, m.nextSeq + 1, vSeg)
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 2)
-      if (segHasData(spark, s"$dir/$tSeg")) m2 = m2.withSegAdded(TOMBSTONES, tSeg)
-      if (segHasData(spark, s"$dir/$vSeg")) m2 = m2.withSegAdded(VECTORS, vSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
-
-  /** Logical deletion (the fourth maintenance op): record vec ids in
-    * a tombstone segment — the per-cell vector files are untouched,
-    * so a delete batch costs one tiny write no matter the index size
-    * (the Lucene/log-structured delete model; a purge list in a
-    * 100 TB embedding store must not rewrite cells). [[servedTopK]]
-    * anti-joins the broadcast tombstone set, so deleted vectors stop
-    * appearing in results immediately; the frozen coarse quantizer
-    * (centroids) deliberately does NOT refit — exactly as
-    * [[appendIndex]] never moves it — so deletion is a candidate-set
-    * change, not a re-clustering ([[compactIndex]] physically
-    * reclaims the rows). Deleting an id twice, or an id not in the
-    * index, is a no-op.
-    *
-    * Each tombstone is (vec_id, upto = the current sequence number):
-    * it kills only rows written BEFORE it, which is what lets
-    * [[upsertIndex]] tombstone and re-add a vector in one step, and
-    * means a delete never affects appends that come after it. */
-  def deleteFromIndex(vecIds: DataFrame, dir: String): Unit = {
-    val spark = vecIds.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val tSeg = m.nextSeg(TOMBSTONES)
-      vecIds.select(col("vec_id")).distinct()
-        .withColumn("upto", lit(m.nextSeq))
-        // dimension-sized purge list: one file per delete batch
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$tSeg")
-      // a delete is a versioned event like an append: advancing the
-      // counter gives every maintenance batch a distinct sequence
-      // slot, which is what makes as-of snapshot reads well-defined
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 1)
-      if (segHasData(spark, s"$dir/$tSeg")) m2 = m2.withSegAdded(TOMBSTONES, tSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
-
-  /** The index's current sequence number — the snapshot id
-    * [[servedTopK]]'s `asOf` parameter accepts. Snapshot S is the
-    * index state after events 0..S−1 (the base build is event 0;
-    * every append/delete/upsert batch advances the counter), so
-    * `currentSeq` names the LATEST state and any value recorded
-    * earlier names the exact historical state the index had then —
-    * the same reproducibility contract as the phrase plane's
-    * [[graft.text.PhraseSearch.currentSeq]]. */
-  def currentSeq(spark: SparkSession, dir: String): Long =
-    Manifest.load(spark, dir).nextSeq
-
-  /** PENDING-RECLAIM backlog: tombstoned vec ids not yet physically
-    * reclaimed, with the event (`upto`) each purge landed at — the
-    * IVF mirror of the phrase plane's ph36 observability, and the
-    * input the cross-plane consistency audit
-    * ([[graft.index.CrossPlane.pendingMismatch]]) compares across
-    * planes. One dimension-sized sidecar read; empty frame if no
-    * deletes are outstanding. */
-  def pendingDeletes(spark: SparkSession, dir: String): DataFrame =
-    tombstonesOf(spark, dir, Manifest.load(spark, dir))
-      .map(_.select(col("vec_id"), col("upto")).distinct())
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      }
+    * some already-indexed vectors, plus possibly brand-new ids): one
+    * commit tombstones the batch's vec_ids and re-adds them (the
+    * versioning is [[graft.index.VersionedIndex]]'s). The new embedding
+    * is quantized on the STORED scale and assigned to the frozen coarse
+    * quantizer (appendIndex's rule) — it may land in a DIFFERENT cell
+    * than the stale version, which is exactly why the stale row must
+    * die by version, not by rewrite. v34's oracle proves a
+    * stale-then-upserted index indistinguishable from the
+    * frozen-quantizer assignment of the corrected corpus. */
+  def upsertIndex(newCorpus: DataFrame, dir: String): Unit =
+    logEvents(newCorpus.sparkSession, dir, Some(newCorpus),
+      Some(appendSeg(newCorpus, dir)))
 
   /** Raw stored vectors across all live segments — the integrity-
     * audit / introspection read (v38), NOT a serving path (no
@@ -433,212 +335,8 @@ object IntKMeans {
     * (vec_id, seq) scan + the broadcast tombstone anti-join; empty
     * frame for an empty index (a fully-taken-down plane serves
     * nothing — that IS its live set). */
-  def liveIds(spark: SparkSession, dir: String): DataFrame = {
-    val m = Manifest.load(spark, dir)
-    Manifest.readComponent(spark, dir, m, VECTORS) match {
-      case Some(v) =>
-        liveOnly(v.select("vec_id", "seq"), spark, dir, m)
-          .select("vec_id").distinct()
-      case None =>
-        import spark.implicits._
-        Seq.empty[Long].toDF("vec_id")
-    }
-  }
-
-  /** Drop tombstoned vectors from an indexed frame carrying
-    * (vec_id, seq) — a broadcast anti-join (the purge list is
-    * dimension-sized); a row dies iff SOME tombstone for its id
-    * postdates it (seq < upto). With `asOf = Some(S)` the frame is
-    * first cut to rows written before snapshot S (seq < S) and only
-    * tombstones that existed at S (upto < S) apply — time travel is
-    * two extra pushed-down predicates, no second layout. Snapshots
-    * older than the retention watermark are REFUSED, not silently
-    * mis-served: [[vacuumIndex]] reclaimed rows they need. */
-  private def liveOnly(df: DataFrame, spark: SparkSession, dir: String,
-                       m: graft.index.Manifest,
-                       asOf: Option[Long] = None): DataFrame = {
-    asOf.foreach { s =>
-      m.retention.foreach(r => require(s >= r,
-        s"snapshot $s predates the retention watermark $r (vacuumed away)"))
-    }
-    val cut = asOf.map(s => df.filter(col("seq") < s)).getOrElse(df)
-    tombstonesOf(spark, dir, m) match {
-      case Some(t) =>
-        val vis = asOf.map(s => t.filter(col("upto") < s)).getOrElse(t)
-        val ts = broadcast(vis.select(col("vec_id").as("__t_vec"),
-          col("upto").as("__t_upto")))
-        cut.join(ts, cut("vec_id") === col("__t_vec") &&
-          cut("seq") < col("__t_upto"), "left_anti")
-      case None => cut
-    }
-  }
-
-  /** Compaction (the third maintenance op after build/append): each
-    * [[appendIndex]] batch adds one segment, so a daily-append index
-    * accumulates small files. Rewrite the vectors back to ONE sorted
-    * (by vec_id) segment — a pure shuffle-by-cell over the index
-    * itself (centroids/scale are tiny and untouched). Tombstoned
-    * vectors are physically dropped during the rewrite; because that
-    * destroys rows historical snapshots still need, the SAME manifest
-    * commit that swaps the segment in advances the retention
-    * watermark to the current seq — atomic by construction, so no
-    * crash ordering can serve a historical snapshot minus its
-    * reclaimed rows (the r14 ADVICE gap: the old layout rewrote the
-    * vectors before writing the watermark). Serve results are
-    * unchanged (v31's oracle row + IntKMeansSpec assert parity and
-    * the file-count drop). */
-  def compactIndex(spark: SparkSession, dir: String): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val hadTombstones = m.segs(TOMBSTONES).nonEmpty
-      // `seq` survives the rewrite: liveOnly resolves it here, and
-      // post-compaction deletes/upserts (`seq < upto`) still need
-      // every row versioned (the exact bug the phrase plane's ph16
-      // caught)
-      val vSeg = m.nextSeg(VECTORS)
-      liveOnly(
-        vectorsOf(spark, dir, m)
-          .select(col("vec_id"), col("q"), col("seq"), col("cell")),
-        spark, dir, m)
-        .repartition(col("cell"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$vSeg")
-      // a fully-tombstoned index rewrites to ZERO rows (_SUCCESS-only
-      // dir): publish an EMPTY component, never a schemaless segment —
-      // readComponent's None handling keeps the index un-bricked and a
-      // later append revives it (ADVICE r15 #1; append/upsert/delete
-      // always guarded this, the rewrites did not)
-      val m2 = withoutPqTier(m.copy(version = m.version + 1,
-          retention = if (hadTombstones) Some(m.nextSeq) else m.retention)
-        .withSegsReplaced(VECTORS,
-          if (segHasData(spark, s"$dir/$vSeg")) Vector(vSeg) else Vector.empty)
-        .withSegsReplaced(TOMBSTONES, Vector.empty))
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-
-  /** Auto-compaction policy: compact iff the manifest lists more than
-    * `maxSegments` vector segments (the phrase plane's
-    * [[graft.text.PhraseSearch.autoCompact]], mirrored — see its note
-    * on why segment count is the serve-side cost driver). Returns
-    * whether it compacted. */
-  def autoCompact(spark: SparkSession, dir: String,
-                  maxSegments: Int = 8): Boolean = {
-    require(maxSegments >= 1)
-    val n = Manifest.load(spark, dir).segs(VECTORS).size
-    if (n > maxSegments) { compactIndex(spark, dir); true } else false
-  }
-
-  /** ROLLBACK: restore the index HEAD to snapshot `toSeq` — the undo
-    * for a bad maintenance batch (a mis-encoded model refresh
-    * upserted, a purge list that was too broad). Every batch is a
-    * seq-stamped event ([[currentSeq]]), so rollback is a TRUNCATION
-    * of the event log: physically drop vector rows written at events
-    * >= toSeq and tombstones recorded at events >= toSeq, then reset
-    * the counter. After it, serving HEAD equals what
-    * `asOf = Some(toSeq)` served before, older snapshots are
-    * untouched, and maintenance continues from toSeq — the next
-    * append reuses the vacated seq slot, which is why the dead rows
-    * must go physically, not logically. Centroids/scale are untouched
-    * (the coarse quantizer is frozen across ALL maintenance, so it
-    * was identical at every snapshot). A filter-rewrite over the
-    * index itself — never refits, never re-quantizes; truncated
-    * segment, surviving tombstones and the reset counter land in ONE
-    * manifest commit. v39's oracle proves HEAD-after-rollback ≡ the
-    * stale snapshot; IntKMeansSpec covers append-after-rollback. */
-  def rollbackIndex(spark: SparkSession, dir: String, toSeq: Long): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val cur = m.nextSeq
-      require(toSeq >= 1 && toSeq <= cur,
-        s"rollback target $toSeq outside [1, $cur]")
-      m.retention.foreach(r => require(toSeq >= r,
-        s"rollback target $toSeq predates the retention watermark $r"))
-      if (toSeq == cur) ()
-      else {
-        val vSeg = m.nextSeg(VECTORS)
-        val tSeg = m.nextSeg(TOMBSTONES)
-        vectorsOf(spark, dir, m)
-          .filter(col("seq") < toSeq)
-          .select(col("vec_id"), col("q"), col("seq"), col("cell"))
-          .repartition(col("cell"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$vSeg")
-        // rollback to before the first surviving row rewrites to zero
-        // rows — same empty-component guard as compactIndex
-        var m2 = withoutPqTier(m.copy(version = m.version + 1, nextSeq = toSeq)
-          .withSegsReplaced(VECTORS,
-            if (segHasData(spark, s"$dir/$vSeg")) Vector(vSeg)
-            else Vector.empty)
-          .withSegsReplaced(TOMBSTONES, Vector.empty))
-        tombstonesOf(spark, dir, m).foreach { t =>
-          val keep = t.filter(col("upto") < toSeq)
-          if (!keep.isEmpty) {
-            keep.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tSeg")
-            m2 = m2.withSegsReplaced(TOMBSTONES, Vector(tSeg))
-          }
-        }
-        Manifest.commit(spark, dir, m2)
-        Manifest.gc(spark, dir, m2)
-      }
-    }
-
-  /** VACUUM: bound time travel at `retainAsOf` and physically reclaim
-    * everything no retained snapshot can see — the retention policy
-    * between [[deleteFromIndex]] (logical, keeps all history) and
-    * [[compactIndex]] (reclaims to HEAD, keeps none). A row written
-    * at seq s and killed by a tombstone at upto u is visible exactly
-    * in snapshots (s, u]; once u < retainAsOf no retained snapshot
-    * can see it, so the rewrite drops rows killed by FULLY-AGED
-    * tombstones (upto < retainAsOf) and those tombstones, advancing
-    * the watermark in the SAME manifest commit — a crash can never
-    * leave reclaimed rows behind a watermark that still admits their
-    * snapshots. HEAD and every as-of >= retainAsOf serve
-    * byte-identically (v43's oracle); older as-of reads and rollbacks
-    * are refused loudly. The watermark is MONOTONIC: a vacuum below
-    * the current watermark is refused — rows behind it are already
-    * gone, so moving it backward would re-admit as-of reads whose
-    * rows were reclaimed (the r14 ADVICE gap). Younger tombstones
-    * stay — retained snapshots still see their rows. */
-  def vacuumIndex(spark: SparkSession, dir: String, retainAsOf: Long): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val cur = m.nextSeq
-      require(retainAsOf >= 1 && retainAsOf <= cur,
-        s"retention watermark $retainAsOf outside [1, $cur]")
-      m.retention.foreach(r => require(retainAsOf >= r,
-        s"retention watermark would move BACKWARD: $retainAsOf < current $r " +
-          "(rows behind the current watermark are already reclaimed)"))
-      var m2 = m.copy(version = m.version + 1, retention = Some(retainAsOf))
-      tombstonesOf(spark, dir, m).foreach { t =>
-        val aged = t.filter(col("upto") < retainAsOf)
-        if (!aged.isEmpty) {
-          val ts = broadcast(aged.select(col("vec_id").as("__t_vec"),
-            col("upto").as("__t_upto")))
-          val vSeg = m.nextSeg(VECTORS)
-          val tSeg = m.nextSeg(TOMBSTONES)
-          val vec = vectorsOf(spark, dir, m)
-          vec.join(ts, vec("vec_id") === col("__t_vec") &&
-              vec("seq") < col("__t_upto"), "left_anti")
-            .select(col("vec_id"), col("q"), col("seq"), col("cell"))
-            .repartition(col("cell"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$vSeg")
-          // all rows aged out -> empty component, not a schemaless dir
-          m2 = withoutPqTier(m2.withSegsReplaced(VECTORS,
-              if (segHasData(spark, s"$dir/$vSeg")) Vector(vSeg)
-              else Vector.empty)
-            .withSegsReplaced(TOMBSTONES, Vector.empty))
-          val young = t.filter(col("upto") >= retainAsOf)
-          if (!young.isEmpty) {
-            young.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tSeg")
-            m2 = m2.withSegsReplaced(TOMBSTONES, Vector(tSeg))
-          }
-        }
-      }
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
+  def liveIds(spark: SparkSession, dir: String): DataFrame =
+    liveIdsOf(spark, dir)
 
   /** REFRESH the coarse quantizer: re-fit Lloyd over the LIVE stored
     * vectors and rewrite the index under the new cell geometry — the
@@ -682,21 +380,18 @@ object IntKMeans {
       }
       val vSeg = m.nextSeg(VECTORS)
       val cSeg = m.nextSeg(CENTROIDS)
-      assign(live, ctr)
-        .select(col("vec_id"), col("q"), lit(0L).as("seq"), col("cell"))
-        .repartition(col("cell"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$vSeg")
+      writeLayout(VECTORS,
+        assign(live, ctr)
+          .select(col("vec_id"), col("q"), lit(0L).as("seq"), col("cell")),
+        s"$dir/$vSeg")
       ctr.write.mode("overwrite").parquet(s"$dir/$cSeg")
       live.unpersist(blocking = false)
       pin.foreach(_.unpersist(blocking = false))
-      val m2 = withoutPqTier(
+      publish(spark, dir, withoutPqTier(
         m.copy(version = m.version + 1, nextSeq = 1L, retention = None)
           .withSegsReplaced(VECTORS, Vector(vSeg))
           .withSegsReplaced(CENTROIDS, Vector(cSeg))
-          .withSegsReplaced(TOMBSTONES, Vector.empty))
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
+          .withSegsReplaced(TOMBSTONES, Vector.empty)))
     }
 
   /** SNAPSHOT DIFF: which vectors changed between two index
@@ -749,29 +444,19 @@ object IntKMeans {
   def initShard(spark: SparkSession, fromDir: String, dir: String): Unit = {
     val from = Manifest.load(spark, fromDir)
     Manifest.withLease(spark, dir) {
-      val ver = Manifest.latest(spark, dir).map(_.version).getOrElse(0L) + 1
-      val cSeg = s"$CENTROIDS/seg-$ver"
+      val next = generation(spark, dir, 0L, Map("ma" -> from.scalar("ma")))
       centroidsOf(spark, fromDir, from)
-        .write.mode("overwrite").parquet(s"$dir/$cSeg")
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 0L, retention = None,
-        scalars = Map("ma" -> from.scalar("ma")),
-        segments = Map(VECTORS -> Vector.empty, CENTROIDS -> Vector(cSeg),
-          TOMBSTONES -> Vector.empty))
-      Manifest.commit(spark, dir, m)
-      Manifest.gc(spark, dir, m)
+        .write.mode("overwrite").parquet(s"$dir/${next.segFor(CENTROIDS)}")
+      publish(spark, dir, withStaged(spark, dir, next, Seq(CENTROIDS)))
     }
   }
 
   /** MERGE shard indexes that share one coarse quantizer into a
-    * single serving layout — the IVF counterpart of the phrase
-    * plane's shard merge (PhraseSearch.mergeIndexes): N builders each
-    * assign a corpus partition against the same frozen centroids
-    * ([[initShard]] + [[appendIndex]]), then one merge job unions the
-    * cell contents, resolving each shard's tombstones during the
-    * rewrite. Never re-fits, never re-quantizes: a union +
-    * shuffle-by-cell over the shards' vectors. The output starts
-    * clean (seq 0, counter 1, no tombstones) and serves exactly like
+    * single serving layout ([[graft.index.VersionedIndex]]'s merge): N
+    * builders each assign a corpus partition against the same frozen
+    * centroids ([[initShard]] + [[appendIndex]]), then one merge job
+    * unions the live cell contents and copies the shared centroids.
+    * Never re-fits, never re-quantizes; the output serves exactly like
     * a single index whose batches were appended sequentially (v35's
     * oracle).
     *
@@ -790,26 +475,9 @@ object IntKMeans {
     val scales = sms.map(_._2.scalar("ma"))
     require(scales.distinct.size == 1,
       s"shards disagree on the int8 scale: $scales")
-    Manifest.withLease(spark, out) {
-      val ver = Manifest.latest(spark, out).map(_.version).getOrElse(0L) + 1
-      val vSeg = s"$VECTORS/seg-$ver"
-      val cSeg = s"$CENTROIDS/seg-$ver"
-      sms.map { case (d, sm) =>
-          liveOnly(vectorsOf(spark, d, sm), spark, d, sm)
-            .select(col("vec_id"), col("q"), col("cell")) }
-        .reduce(_.unionByName(_))
-        .withColumn("seq", lit(0L))
-        .repartition(col("cell"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/$vSeg")
-      ctrs.head.write.mode("overwrite").parquet(s"$out/$cSeg")
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 1L, retention = None,
-        scalars = Map("ma" -> scales.head),
-        segments = Map(VECTORS -> Vector(vSeg), CENTROIDS -> Vector(cSeg),
-          TOMBSTONES -> Vector.empty))
-      Manifest.commit(spark, out, m)
-      Manifest.gc(spark, out, m)
+    mergeLive(spark, sms, out, Map("ma" -> scales.head)) { next =>
+      ctrs.head.write.mode("overwrite").parquet(s"$out/${next.segFor(CENTROIDS)}")
+      Seq(CENTROIDS)
     }
   }
 
@@ -969,7 +637,7 @@ object IntKMeans {
       // at 0 or the low ids were deleted away, centDf is EMPTY and
       // both tier segments would be committed as _SUCCESS-only dirs
       // (the exact schemaless-read bug class the rewrite ops'
-      // segHasData guard closed in r15). The tier build is a rare
+      // empty-component guard closed in r15). The tier build is a rare
       // batch op, so one driver-side probe of the seed rows is cheap
       // insurance against bricking every later read. The same probe
       // pins the subspace geometry: slice() silently SHORTENS past
@@ -1009,15 +677,13 @@ object IntKMeans {
         .sortWithinPartitions("vec_id")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$pSeg")
       centDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/$bSeg")
-      val m2 = man.copy(version = man.version + 1,
+      publish(spark, dir, man.copy(version = man.version + 1,
           scalars = man.scalars ++ Map(
             "pq_m" -> m.toString, "pq_subdim" -> subDim.toString,
             "pq_codes" -> nCodes.toString,
             "pq_as_of" -> man.nextSeq.toString))
         .withSegsReplaced(PQCODES, Vector(pSeg))
-        .withSegsReplaced(PQBOOK, Vector(bSeg))
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
+        .withSegsReplaced(PQBOOK, Vector(bSeg)))
     }
   }
 

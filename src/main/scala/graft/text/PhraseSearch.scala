@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.index.VersionedIndex.publish
 import graft.sources.FileRelations
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * become semi/anti joins on doc ids, which Catalyst executes as
   * broadcast hash joins at dimension scale.
   */
-object PhraseSearch {
+object PhraseSearch extends graft.index.VersionedIndex {
 
   /** Occurrences of an n-token phrase: (doc_id, pos) for each start.
     * Single-word phrases reduce to a pushed-down filter; n-grams
@@ -440,29 +441,65 @@ object PhraseSearch {
     * doc-level metadata BM25 needs and the universe NOT needs, so the
     * whole §3.3 boolean/ranked surface serves without touching
     * `documents`), and `dir/manifest/v*.manifest` naming the live
-    * segments, the batch-sequence counter, the retention watermark
-    * and the bucket modulus (see [[graft.index.Manifest]] — every
-    * maintenance op stages new segments and publishes them in ONE
-    * atomic manifest commit). Rows within each postings file are
-    * sorted by (tok, doc_id, pos): parquet row-group min/max stats on
-    * `tok` skip non-matching row groups inside a bucket, the second
-    * pruning level. */
+    * segments and the bucket modulus ([[graft.index.Manifest]];
+    * maintenance follows [[graft.index.VersionedIndex]]). Rows within
+    * each postings file are sorted by (tok, doc_id, pos): parquet
+    * row-group min/max stats on `tok` skip non-matching row groups
+    * inside a bucket, the second pruning level. */
   private val POSTINGS = "postings"
   private val DOCLEN = "doclen"
-  private val TOMBSTONES = "tombstones"
   private val LEXICON = "lexicon"
   private type SparkSession = org.apache.spark.sql.SparkSession
   private val Manifest = graft.index.Manifest
 
-  private def postingsSegDf(toks: DataFrame, seq: Long,
-                            nBuckets: Int): DataFrame = {
+  // the plane's part of the versioned-row model (graft.index.VersionedIndex)
+  protected val idCol = "doc_id"
+  protected val components = Seq(POSTINGS, DOCLEN, LEXICON)
+  protected val versioned = Seq(POSTINGS, DOCLEN)
+  protected val idSource = DOCLEN
+
+  protected def rowsOf(spark: SparkSession, dir: String,
+                       m: graft.index.Manifest, c: String): DataFrame =
+    if (c == POSTINGS) postingsOf(spark, dir, m) else doclenOf(spark, dir, m)
+
+  /** Postings: hash-bucket partitioned, each file sorted by (tok,
+    * doc_id, pos). Doclen (rewrites and merges): range-partitioned and
+    * sorted by doc_id — one row per document is corpus-sized at 100 TB,
+    * so bounded file counts with doc_id min/max stats per file, not
+    * coalesce(1). */
+  protected def writeLayout(c: String, rows: DataFrame, path: String): Unit =
+    if (c == POSTINGS)
+      rows.repartition(col("bucket")).sortWithinPartitions("tok", "doc_id", "pos")
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    else
+      rows.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
+        .write.mode("overwrite").parquet(path)
+
+  /** After a rewrite or merge the lexicon converges to the kept
+    * vocabulary (stale upsert tokens and reclaimed docs' exclusive
+    * tokens drop out): ONE distinct over the just-written postings
+    * segment, read through the resolver so the first served read finds
+    * it resolved. Empty postings publish an empty lexicon. */
+  protected def afterRewrite(spark: SparkSession, dir: String,
+                             next: graft.index.Manifest): graft.index.Manifest =
+    next.segs(POSTINGS) match {
+      case Vector(p) =>
+        val lSeg = next.segFor(LEXICON)
+        FileRelations.read(spark, s"$dir/$p").select(col("tok"), col("bucket"))
+          .distinct()
+          .repartitionByRange(col("tok")).sortWithinPartitions("tok")
+          .write.mode("overwrite").parquet(s"$dir/$lSeg")
+        next.withSegsReplaced(LEXICON, Vector(lSeg))
+      case _ => next.withSegsReplaced(LEXICON, Vector.empty)
+    }
+
+  private def postingsRows(toks: DataFrame, seq: Long,
+                           nBuckets: Int): DataFrame = {
     val bucket = pmod(graft.text.TextOps.fingerprint(col("tok")),
       lit(nBuckets.toLong))
     toks.select(col("doc_id"), col("pos"), col("tok"))
       .withColumn("seq", lit(seq))
       .withColumn("bucket", bucket)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("tok", "doc_id", "pos")
   }
 
   private def doclenSegDf(toks: DataFrame, seq: Long): DataFrame =
@@ -491,45 +528,29 @@ object PhraseSearch {
       .repartitionByRange(col("tok"))
       .sortWithinPartitions("tok")
 
-  /** True iff the just-written segment dir holds any data (an empty
-    * micro-batch writes only a _SUCCESS marker — such a segment must
-    * not enter the manifest, or later multi-segment reads would see a
-    * schemaless root). */
-  private def segHasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      n != "_SUCCESS" && !n.startsWith(".") && !n.startsWith("_")
-    }
+  /** Write one batch of `toks` stamped `seq` into `next`'s postings,
+    * doclen and lexicon segments (build, append and upsert). */
+  private def stageBatch(toks: DataFrame, dir: String)(
+      next: graft.index.Manifest, seq: Long): Seq[String] = {
+    val nBuckets = next.scalar("n_buckets").toInt
+    writeLayout(POSTINGS, postingsRows(toks, seq, nBuckets),
+      s"$dir/${next.segFor(POSTINGS)}")
+    doclenSegDf(toks, seq)
+      .write.mode("overwrite").parquet(s"$dir/${next.segFor(DOCLEN)}")
+    lexiconSegDf(toks, nBuckets)
+      .write.mode("overwrite").parquet(s"$dir/${next.segFor(LEXICON)}")
+    Seq(POSTINGS, DOCLEN, LEXICON)
   }
 
+  /** Build a new generation from `toks` (seq 0, counter 1). An empty
+    * frame builds an index with empty components, which an append
+    * revives. */
   def writeIndex(toks: DataFrame, dir: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1)
     val spark = toks.sparkSession
     Manifest.withLease(spark, dir) {
-      // a fresh build over a previously-used dir starts a NEW
-      // generation: the new manifest references only the new
-      // segments, so stale tombstones/retention from the old one are
-      // dead on commit (and their files gc'd below)
-      val ver = Manifest.latest(spark, dir).map(_.version).getOrElse(0L) + 1
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 1L, retention = None,
-        scalars = Map("n_buckets" -> nBuckets.toString),
-        segments = Map(
-          POSTINGS -> Vector(s"$POSTINGS/seg-$ver"),
-          DOCLEN -> Vector(s"$DOCLEN/seg-$ver"),
-          LEXICON -> Vector(s"$LEXICON/seg-$ver"),
-          TOMBSTONES -> Vector.empty))
-      postingsSegDf(toks, 0L, nBuckets)
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/$POSTINGS/seg-$ver")
-      doclenSegDf(toks, 0L)
-        .write.mode("overwrite").parquet(s"$dir/$DOCLEN/seg-$ver")
-      lexiconSegDf(toks, nBuckets)
-        .write.mode("overwrite").parquet(s"$dir/$LEXICON/seg-$ver")
-      Manifest.commit(spark, dir, m)
-      Manifest.gc(spark, dir, m)
+      val next = generation(spark, dir, 1L, Map("n_buckets" -> nBuckets.toString))
+      publish(spark, dir, withStaged(spark, dir, next, stageBatch(toks, dir)(next, 0L)))
     }
   }
 
@@ -542,28 +563,14 @@ object PhraseSearch {
   def initIndex(spark: SparkSession, dir: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1)
     Manifest.withLease(spark, dir) {
-      val ver = Manifest.latest(spark, dir).map(_.version).getOrElse(0L) + 1
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 0L, retention = None,
-        scalars = Map("n_buckets" -> nBuckets.toString),
-        segments = Map(POSTINGS -> Vector.empty, DOCLEN -> Vector.empty,
-          LEXICON -> Vector.empty, TOMBSTONES -> Vector.empty))
-      Manifest.commit(spark, dir, m)
-      Manifest.gc(spark, dir, m)
+      publish(spark, dir,
+        generation(spark, dir, 0L, Map("n_buckets" -> nBuckets.toString)))
     }
   }
 
-  // ---- batch sequence numbers (the versioning that makes UPSERT
-  // possible): every batch of rows carries the seq it was written
-  // under (base build = 0, each append = the then-current counter),
-  // and a tombstone is (doc_id, upto) — it kills only rows with
-  // seq < upto, so an upsert's replacement rows (written AT upto)
-  // survive their own doc's tombstone. This is the Lucene/LSM delete
-  // model: nothing is rewritten, visibility is resolved at read time,
-  // compaction makes it physical. The counter lives in the manifest
-  // (one driver-side metadata read per op, committed atomically with
-  // the segment list). The single-writer contract appendIndex always
-  // documented is now ENFORCED by the manifest's writer lease.
+  // Rows are seq-stamped and deleted by tombstone: see
+  // graft.index.VersionedIndex for the versioning, the as-of reads and
+  // the rewrites (compact, rollback, vacuum) this plane inherits.
 
   private def postingsOf(spark: SparkSession, dir: String,
                          m: graft.index.Manifest): DataFrame =
@@ -576,10 +583,6 @@ object PhraseSearch {
     Manifest.readComponent(spark, dir, m, DOCLEN)
       .getOrElse(throw new IllegalStateException(
         s"index at $dir has no doclen segments (empty init, nothing appended)"))
-
-  private def tombstonesOf(spark: SparkSession, dir: String,
-                           m: graft.index.Manifest): Option[DataFrame] =
-    Manifest.readComponent(spark, dir, m, TOMBSTONES)
 
   /** Incremental maintenance (the daily-crawl shape): append a NEW
     * batch's postings/doc-lengths to an existing [[writeIndex]] layout
@@ -596,121 +599,20 @@ object PhraseSearch {
     * CONTRACT: batch doc_ids must be disjoint from already-indexed
     * ones (append batches are new documents, not updates) — ph10's
     * oracle proves full-rebuild ≡ build-half + append-half under it. */
-  def appendIndex(newToks: DataFrame, dir: String): Unit = {
-    val spark = newToks.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val nBuckets = m.scalar("n_buckets").toInt
-      val pSeg = m.nextSeg(POSTINGS)
-      val dSeg = m.nextSeg(DOCLEN)
-      val lSeg = m.nextSeg(LEXICON)
-      postingsSegDf(newToks, m.nextSeq, nBuckets)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/$pSeg")
-      doclenSegDf(newToks, m.nextSeq)
-        .write.mode("overwrite").parquet(s"$dir/$dSeg")
-      lexiconSegDf(newToks, nBuckets)
-        .write.mode("overwrite").parquet(s"$dir/$lSeg")
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 1)
-      if (segHasData(spark, s"$dir/$pSeg")) m2 = m2.withSegAdded(POSTINGS, pSeg)
-      if (segHasData(spark, s"$dir/$dSeg")) m2 = m2.withSegAdded(DOCLEN, dSeg)
-      if (segHasData(spark, s"$dir/$lSeg")) m2 = m2.withSegAdded(LEXICON, lSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
+  def appendIndex(newToks: DataFrame, dir: String): Unit =
+    logEvents(newToks.sparkSession, dir, None, Some(stageBatch(newToks, dir)))
 
   /** UPSERT (the re-crawl shape: a batch of documents whose content
     * CHANGED since they were indexed, plus possibly brand-new ones):
-    * tombstone the batch's doc ids at the current sequence number S,
-    * then add the new token rows at S+1 — the tombstone
-    * (doc_id, upto = S) kills every older version (seq < S) while the
-    * replacement rows (seq = S+1) survive it. Both the tombstone
-    * segment and the replacement segments land in ONE manifest
-    * commit, so the upsert is atomic even across its two logical
-    * events — no reader can see the delete without the replacement.
-    * Upserting a doc the index never held degenerates to a plain
-    * append (the tombstone kills nothing). ph17/ph18's oracles prove
-    * a stale-then-upserted index indistinguishable from one built on
-    * the corrected corpus — positions, BM25 stats and all. */
-  def upsertIndex(newToks: DataFrame, dir: String): Unit = {
-    val spark = newToks.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val nBuckets = m.scalar("n_buckets").toInt
-      val tSeg = m.nextSeg(TOMBSTONES)
-      val pSeg = m.nextSeg(POSTINGS)
-      val dSeg = m.nextSeg(DOCLEN)
-      val lSeg = m.nextSeg(LEXICON)
-      newToks.select(col("doc_id")).distinct()
-        .withColumn("upto", lit(m.nextSeq))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$tSeg")
-      postingsSegDf(newToks, m.nextSeq + 1, nBuckets)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/$pSeg")
-      doclenSegDf(newToks, m.nextSeq + 1)
-        .write.mode("overwrite").parquet(s"$dir/$dSeg")
-      lexiconSegDf(newToks, nBuckets)
-        .write.mode("overwrite").parquet(s"$dir/$lSeg")
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 2)
-      if (segHasData(spark, s"$dir/$tSeg")) m2 = m2.withSegAdded(TOMBSTONES, tSeg)
-      if (segHasData(spark, s"$dir/$pSeg")) m2 = m2.withSegAdded(POSTINGS, pSeg)
-      if (segHasData(spark, s"$dir/$dSeg")) m2 = m2.withSegAdded(DOCLEN, dSeg)
-      if (segHasData(spark, s"$dir/$lSeg")) m2 = m2.withSegAdded(LEXICON, lSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
-
-  /** Logical deletion (the fourth maintenance op after build/append/
-    * compact): record the doc ids in a tombstone segment — the
-    * postings/doclen files are untouched, so a delete batch costs one
-    * tiny write no matter how large the index is (the Lucene/
-    * log-structured delete model; the reference deletes videos by
-    * row, cascading to their captions — models.py's Video FK graph —
-    * and a takedown/purge in a 100 TB corpus must not rewrite the
-    * corpus). Serve paths anti-join the broadcast tombstone set, so
-    * deletes are visible immediately; [[compactIndex]] physically
-    * reclaims them. Delete batches accumulate across calls;
-    * re-deleting an id or deleting an unindexed id is a no-op at
-    * serve time (anti-join semantics).
-    *
-    * Each tombstone is (doc_id, upto = the current sequence number):
-    * it kills only rows written BEFORE it (seq < upto), which is what
-    * lets [[upsertIndex]] tombstone and re-add a doc in one step, and
-    * means a delete never affects appends that come after it. */
-  def deleteFromIndex(docIds: DataFrame, dir: String): Unit = {
-    val spark = docIds.sparkSession
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val tSeg = m.nextSeg(TOMBSTONES)
-      docIds.select(col("doc_id")).distinct()
-        .withColumn("upto", lit(m.nextSeq))
-        // a delete batch is dimension-sized (takedowns, purge lists) —
-        // one file per batch, not one per shuffle partition
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$tSeg")
-      // a delete is a versioned event like an append: advancing the
-      // counter gives every maintenance batch a distinct sequence
-      // slot, which is what makes as-of snapshot reads well-defined
-      // (snapshot S excludes tombstones with upto >= S — they had not
-      // happened yet at S)
-      var m2 = m.copy(version = m.version + 1, nextSeq = m.nextSeq + 1)
-      if (segHasData(spark, s"$dir/$tSeg")) m2 = m2.withSegAdded(TOMBSTONES, tSeg)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-  }
-
-  /** The index's current sequence number — the snapshot id the
-    * `asOf` serve parameters accept. Snapshot S is the index state
-    * after events 0..S−1 (the base build is event 0; every
-    * append/delete/upsert batch advances the counter), so
-    * `currentSeq` names the LATEST state and any value recorded
-    * earlier names the exact historical state the index had then —
-    * the reproducibility hook a training-data pipeline needs
-    * ("rebuild the corpus view that produced run X"). */
-  def currentSeq(spark: SparkSession, dir: String): Long =
-    Manifest.load(spark, dir).nextSeq
+    * one commit tombstones the batch's doc ids and re-adds their token
+    * rows (the versioning is [[graft.index.VersionedIndex]]'s), so no
+    * reader sees the delete without the replacement. ph17/ph18's
+    * oracles prove a stale-then-upserted index indistinguishable from
+    * one built on the corrected corpus — positions, BM25 stats and
+    * all. */
+  def upsertIndex(newToks: DataFrame, dir: String): Unit =
+    logEvents(newToks.sparkSession, dir, Some(newToks),
+      Some(stageBatch(newToks, dir)))
 
   /** Raw postings across all live segments — the integrity-audit /
     * introspection read (ph13), NOT a serving path (no tombstone or
@@ -721,34 +623,6 @@ object PhraseSearch {
   /** Raw doclen sidecar across all live segments (see [[rawPostings]]). */
   def rawDoclen(spark: SparkSession, dir: String): DataFrame =
     doclenOf(spark, dir, Manifest.load(spark, dir))
-
-  /** Drop tombstoned rows from an indexed frame carrying (doc_id,
-    * seq) — a broadcast anti-join (the delete set is dimension-
-    * sized); a row dies iff SOME tombstone for its doc postdates it
-    * (seq < upto). With `asOf = Some(S)` the frame is first cut to
-    * rows written before snapshot S (seq < S) and only tombstones
-    * that existed at S (upto < S) apply — the whole time-travel read
-    * is two extra pushed-down predicates, no second layout. Snapshots
-    * older than the retention watermark are REFUSED, not silently
-    * mis-served: [[vacuumIndex]] reclaimed rows they need. */
-  private def liveOnly(df: DataFrame, spark: SparkSession, dir: String,
-                       m: graft.index.Manifest,
-                       asOf: Option[Long] = None): DataFrame = {
-    asOf.foreach { s =>
-      m.retention.foreach(r => require(s >= r,
-        s"snapshot $s predates the retention watermark $r (vacuumed away)"))
-    }
-    val cut = asOf.map(s => df.filter(col("seq") < s)).getOrElse(df)
-    tombstonesOf(spark, dir, m) match {
-      case Some(t) =>
-        val vis = asOf.map(s => t.filter(col("upto") < s)).getOrElse(t)
-        val ts = broadcast(vis.select(col("doc_id").as("__t_doc"),
-          col("upto").as("__t_upto")))
-        cut.join(ts, cut("doc_id") === col("__t_doc") &&
-          cut("seq") < col("__t_upto"), "left_anti")
-      case None => cut
-    }
-  }
 
   /** Driver-side mirror of the build's bucket assignment (same
     * RollingHash the [[writeIndex]] expression uses — HashExprSpec
@@ -938,245 +812,6 @@ object PhraseSearch {
                           asOf: Option[Long] = None): DataFrame =
     proximityHits(servedPostings(spark, dir, Seq(a, b).distinct, asOf), a, b, k)
 
-  /** Compaction (the third maintenance op after build/append): each
-    * [[appendIndex]] batch adds one segment per op, so a long-running
-    * daily-append index accumulates small files and loses the global
-    * (tok, doc_id, pos) order within a bucket — row-group `tok` stats
-    * still prune per file, but over ever more files. Compaction
-    * rewrites the postings back to ONE sorted segment (and the doclen
-    * sidecar to one), restoring build-fresh layout without
-    * re-tokenizing anything: a pure shuffle-by-bucket + sort over the
-    * index itself. Tombstoned docs are physically reclaimed during
-    * the rewrite; because the reclaim destroys rows that historical
-    * snapshots still need, the SAME manifest commit that swaps the
-    * segments in also advances the retention watermark to the current
-    * seq — atomic by construction, so no crash ordering can serve a
-    * historical snapshot minus its reclaimed rows (the r14 ADVICE
-    * gap: the old layout wrote the rewrite before the watermark).
-    * Serve results are unchanged — ph11's oracle row and
-    * PhraseIndexSpec assert exact parity and the file-count drop. */
-  def compactIndex(spark: SparkSession, dir: String): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val hadTombstones = m.segs(TOMBSTONES).nonEmpty
-      // `seq` must survive the rewrite: liveOnly resolves it here, and
-      // post-compaction deletes (`seq < upto`) and upserts still need
-      // every row versioned.
-      val pSeg = m.nextSeg(POSTINGS)
-      val dSeg = m.nextSeg(DOCLEN)
-      liveOnly(
-        postingsOf(spark, dir, m)
-          .select(col("doc_id"), col("pos"), col("tok"), col("seq"),
-            col("bucket")),
-        spark, dir, m)
-        .repartition(col("bucket"))
-        .sortWithinPartitions("tok", "doc_id", "pos")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/$pSeg")
-      // range-partition + sort by doc_id (NOT coalesce(1) — doclen is
-      // one row per document, corpus-sized at 100 TB): bounded file
-      // count per compaction with doc_id min/max stats per file
-      liveOnly(doclenOf(spark, dir, m), spark, dir, m)
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$dir/$dSeg")
-      // the lexicon converges to the kept vocabulary (stale upsert
-      // tokens and reclaimed docs' exclusive tokens drop out): ONE
-      // distinct over the just-written consolidated segment. A
-      // fully-tombstoned index rewrites to ZERO rows — then every
-      // component publishes EMPTY (never a schemaless _SUCCESS-only
-      // segment; ADVICE r15 #1): the op completes, reads fail with
-      // readComponent's loud empty-index path, and an append revives
-      // the index.
-      val compacted = segHasData(spark, s"$dir/$pSeg")
-      val lSeg = m.nextSeg(LEXICON)
-      if (compacted)
-        FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
-          .distinct()
-          .repartitionByRange(col("tok")).sortWithinPartitions("tok")
-          .write.mode("overwrite").parquet(s"$dir/$lSeg")
-      def seg(s: String): Vector[String] =
-        if (compacted) Vector(s) else Vector.empty
-      val m2 = m.copy(version = m.version + 1,
-          // tombstones were applied at HEAD, so snapshots older than
-          // the current seq lost rows: the watermark advances IN THE
-          // SAME COMMIT and those as-of reads are refused loudly
-          // (compact ≡ [[vacuumIndex]] at the current seq)
-          retention = if (hadTombstones) Some(m.nextSeq) else m.retention)
-        .withSegsReplaced(POSTINGS, seg(pSeg))
-        .withSegsReplaced(DOCLEN, seg(dSeg))
-        .withSegsReplaced(LEXICON, seg(lSeg))
-        .withSegsReplaced(TOMBSTONES, Vector.empty)
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-
-  /** Auto-compaction policy: compact iff the manifest lists more than
-    * `maxSegments` postings segments — the scheduler knob that keeps
-    * long-running append/upsert streams from accumulating unbounded
-    * union branches and small files (each maintenance op adds one
-    * segment; every serve unions the live ones, so segment count IS
-    * the serve-side cost driver [[graft.index.Manifest.describe]]
-    * exposes). Returns whether it compacted. A streaming ingest calls
-    * it after each batch: amortized one rewrite per `maxSegments`
-    * appends, the classic LSM trigger. */
-  def autoCompact(spark: SparkSession, dir: String,
-                  maxSegments: Int = 8): Boolean = {
-    require(maxSegments >= 1)
-    val n = Manifest.load(spark, dir).segs(POSTINGS).size
-    if (n > maxSegments) { compactIndex(spark, dir); true } else false
-  }
-
-  /** ROLLBACK: restore the index HEAD to snapshot `toSeq` — the
-    * undo for a bad maintenance batch (a corrupted re-crawl upserted,
-    * a takedown list that was too broad). Because every batch is a
-    * seq-stamped event (see [[currentSeq]]), rollback is a TRUNCATION
-    * of the event log: physically drop rows written at events
-    * >= toSeq and tombstones recorded at events >= toSeq, then reset
-    * the counter to toSeq. After it, serving HEAD equals what
-    * `asOf = Some(toSeq)` served before, every older snapshot is
-    * untouched (their rows and tombstones all predate the cut), and
-    * maintenance continues from toSeq — the next append writes at
-    * the seq slot the rolled-back batch vacated, which is exactly why
-    * the dead rows must be removed physically, not hidden. The
-    * rewrite is a filter over the index itself (never re-tokenizes);
-    * rollback to the current seq is a no-op. Truncated segments,
-    * surviving tombstones and the reset counter land in ONE manifest
-    * commit — no crash ordering to argue about. ph26's oracle proves
-    * HEAD-after-rollback ≡ the stale corpus; PhraseIndexSpec covers
-    * append-after-rollback reusing the freed seq slot. */
-  def rollbackIndex(spark: SparkSession, dir: String, toSeq: Long): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val cur = m.nextSeq
-      require(toSeq >= 1 && toSeq <= cur,
-        s"rollback target $toSeq outside [1, $cur]")
-      m.retention.foreach(r => require(toSeq >= r,
-        s"rollback target $toSeq predates the retention watermark $r"))
-      if (toSeq == cur) ()
-      else rollbackTo(spark, dir, m, toSeq)
-    }
-
-  private def rollbackTo(spark: SparkSession, dir: String,
-                         m: graft.index.Manifest, toSeq: Long): Unit = {
-      val pSeg = m.nextSeg(POSTINGS)
-      val dSeg = m.nextSeg(DOCLEN)
-      val tSeg = m.nextSeg(TOMBSTONES)
-      postingsOf(spark, dir, m)
-        .filter(col("seq") < toSeq)
-        .select(col("doc_id"), col("pos"), col("tok"), col("seq"),
-          col("bucket"))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("tok", "doc_id", "pos")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/$pSeg")
-      doclenOf(spark, dir, m)
-        .filter(col("seq") < toSeq)
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$dir/$dSeg")
-      // rollback to before the first surviving batch truncates to
-      // zero rows — same empty-component guard as compactIndex
-      val kept = segHasData(spark, s"$dir/$pSeg")
-      val lSeg = m.nextSeg(LEXICON)
-      if (kept)
-        FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
-          .distinct()
-          .repartitionByRange(col("tok")).sortWithinPartitions("tok")
-          .write.mode("overwrite").parquet(s"$dir/$lSeg")
-      def seg(s: String): Vector[String] =
-        if (kept) Vector(s) else Vector.empty
-      var m2 = m.copy(version = m.version + 1, nextSeq = toSeq)
-        .withSegsReplaced(POSTINGS, seg(pSeg))
-        .withSegsReplaced(DOCLEN, seg(dSeg))
-        .withSegsReplaced(LEXICON, seg(lSeg))
-        .withSegsReplaced(TOMBSTONES, Vector.empty)
-      tombstonesOf(spark, dir, m).foreach { t =>
-        val keep = t.filter(col("upto") < toSeq)
-        if (!keep.isEmpty) {
-          keep.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tSeg")
-          m2 = m2.withSegsReplaced(TOMBSTONES, Vector(tSeg))
-        }
-      }
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-  }
-
-  /** VACUUM: bound time travel at `retainAsOf` and physically reclaim
-    * everything no retained snapshot can see — the retention policy
-    * between [[deleteFromIndex]] (logical only, keeps all history)
-    * and [[compactIndex]] (reclaims to HEAD, keeps none). A row
-    * written at seq s and killed by a tombstone at upto u is visible
-    * exactly in snapshots (s, u]; once u < retainAsOf no snapshot
-    * this index still serves can see it, so the rewrite drops rows
-    * killed by a FULLY-AGED tombstone (upto < retainAsOf), drops
-    * those tombstones, and advances the watermark — all in ONE
-    * manifest commit, so a crash can never leave reclaimed rows
-    * behind a watermark that still admits their snapshots. HEAD and
-    * every as-of >= retainAsOf serve byte-identically (ph29's
-    * oracle); as-of reads and rollbacks below the watermark are
-    * REFUSED loudly (liveOnly/rollbackIndex check it). The watermark
-    * is MONOTONIC: a vacuum below the current watermark is refused —
-    * rows behind it are already gone, so moving it backward would
-    * re-admit as-of reads whose rows were reclaimed (the r14 ADVICE
-    * gap). Younger tombstones stay — their rows are still visible to
-    * retained snapshots. Vacuum at the current seq ≡ compact's
-    * reclaim with history fully dropped. */
-  def vacuumIndex(spark: SparkSession, dir: String, retainAsOf: Long): Unit =
-    Manifest.withLease(spark, dir) {
-      val m = Manifest.load(spark, dir)
-      val cur = m.nextSeq
-      require(retainAsOf >= 1 && retainAsOf <= cur,
-        s"retention watermark $retainAsOf outside [1, $cur]")
-      m.retention.foreach(r => require(retainAsOf >= r,
-        s"retention watermark would move BACKWARD: $retainAsOf < current $r " +
-          "(rows behind the current watermark are already reclaimed)"))
-      var m2 = m.copy(version = m.version + 1, retention = Some(retainAsOf))
-      tombstonesOf(spark, dir, m).foreach { t =>
-        val aged = t.filter(col("upto") < retainAsOf)
-        if (!aged.isEmpty) {
-          val ts = broadcast(aged.select(col("doc_id").as("__t_doc"),
-            col("upto").as("__t_upto")))
-          def reclaim(df: DataFrame): DataFrame =
-            df.join(ts, df("doc_id") === col("__t_doc") &&
-              df("seq") < col("__t_upto"), "left_anti")
-          val pSeg = m.nextSeg(POSTINGS)
-          val dSeg = m.nextSeg(DOCLEN)
-          val tSeg = m.nextSeg(TOMBSTONES)
-          reclaim(postingsOf(spark, dir, m)
-              .select(col("doc_id"), col("pos"), col("tok"), col("seq"),
-                col("bucket")))
-            .repartition(col("bucket"))
-            .sortWithinPartitions("tok", "doc_id", "pos")
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$dir/$pSeg")
-          reclaim(doclenOf(spark, dir, m))
-            .repartitionByRange(col("doc_id"))
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite").parquet(s"$dir/$dSeg")
-          // all rows aged out -> empty components (guard as compact)
-          val kept = segHasData(spark, s"$dir/$pSeg")
-          val lSeg = m.nextSeg(LEXICON)
-          if (kept)
-            FileRelations.read(spark, s"$dir/$pSeg").select(col("tok"), col("bucket"))
-              .distinct()
-              .repartitionByRange(col("tok")).sortWithinPartitions("tok")
-              .write.mode("overwrite").parquet(s"$dir/$lSeg")
-          def seg(s: String): Vector[String] =
-            if (kept) Vector(s) else Vector.empty
-          m2 = m2.withSegsReplaced(POSTINGS, seg(pSeg))
-            .withSegsReplaced(DOCLEN, seg(dSeg))
-            .withSegsReplaced(LEXICON, seg(lSeg))
-            .withSegsReplaced(TOMBSTONES, Vector.empty)
-          val young = t.filter(col("upto") >= retainAsOf)
-          if (!young.isEmpty) {
-            young.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tSeg")
-            m2 = m2.withSegsReplaced(TOMBSTONES, Vector(tSeg))
-          }
-        }
-      }
-      Manifest.commit(spark, dir, m2)
-      Manifest.gc(spark, dir, m2)
-    }
-
   /** MERGE independently built shard indexes into one serving layout —
     * the distributed 100 TB build shape: N builders each tokenize and
     * index a corpus partition in parallel (no coordination beyond a
@@ -1199,40 +834,7 @@ object PhraseSearch {
     val moduli = sms.map(_._2.scalar("n_buckets").toInt)
     require(moduli.distinct.size == 1,
       s"shards disagree on the bucket modulus: $moduli")
-    Manifest.withLease(spark, out) {
-      val ver = Manifest.latest(spark, out).map(_.version).getOrElse(0L) + 1
-      val m = graft.index.Manifest(
-        version = ver, nextSeq = 1L, retention = None,
-        scalars = Map("n_buckets" -> moduli.head.toString),
-        segments = Map(
-          POSTINGS -> Vector(s"$POSTINGS/seg-$ver"),
-          DOCLEN -> Vector(s"$DOCLEN/seg-$ver"),
-          LEXICON -> Vector(s"$LEXICON/seg-$ver"),
-          TOMBSTONES -> Vector.empty))
-      sms.map { case (d, sm) =>
-          liveOnly(postingsOf(spark, d, sm), spark, d, sm)
-            .select(col("doc_id"), col("pos"), col("tok"), col("bucket")) }
-        .reduce(_.unionByName(_))
-        .withColumn("seq", lit(0L))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("tok", "doc_id", "pos")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$out/$POSTINGS/seg-$ver")
-      sms.map { case (d, sm) =>
-          liveOnly(doclenOf(spark, d, sm), spark, d, sm)
-            .select(col("doc_id"), col("dl")) }
-        .reduce(_.unionByName(_))
-        .withColumn("seq", lit(0L))
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$out/$DOCLEN/seg-$ver")
-      FileRelations.read(spark, s"$out/$POSTINGS/seg-$ver")
-        .select(col("tok"), col("bucket")).distinct()
-        .repartitionByRange(col("tok")).sortWithinPartitions("tok")
-        .write.mode("overwrite").parquet(s"$out/$LEXICON/seg-$ver")
-      Manifest.commit(spark, out, m)
-      Manifest.gc(spark, out, m)
-    }
+    mergeLive(spark, sms, out, Map("n_buckets" -> moduli.head.toString))(_ => Nil)
   }
 
   /** All words a boolean query touches (its served vocabulary). An
@@ -1323,33 +925,13 @@ object PhraseSearch {
       .limit(k)
   }
 
-  /** PENDING-RECLAIM backlog: tombstoned doc ids not yet physically
-    * reclaimed, with the event (`upto`) each takedown landed at — the
-    * observability behind a compaction/vacuum schedule (how much dead
-    * weight serving anti-joins carry). One dimension-sized sidecar
-    * read; empty frame if no deletes are outstanding. */
-  def pendingDeletes(spark: SparkSession, dir: String): DataFrame =
-    tombstonesOf(spark, dir, Manifest.load(spark, dir))
-      .map(_.select(col("doc_id"), col("upto")).distinct())
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("doc_id", "upto")
-      }
-
   /** Doc ids the index SERVES at HEAD (tombstones applied) — the
     * liveness probe behind the cross-plane audit (the IVF plane's
     * [[graft.similarity.IntKMeans.liveIds]] twin). One
     * dimension-sized doclen sidecar read; empty frame for an empty
     * index. */
-  def liveDocIds(spark: SparkSession, dir: String): DataFrame = {
-    val m = Manifest.load(spark, dir)
-    Manifest.readComponent(spark, dir, m, DOCLEN) match {
-      case Some(d) => liveOnly(d, spark, dir, m).select("doc_id").distinct()
-      case None =>
-        import spark.implicits._
-        Seq.empty[Long].toDF("doc_id")
-    }
-  }
+  def liveDocIds(spark: SparkSession, dir: String): DataFrame =
+    liveIdsOf(spark, dir)
 
   /** BATCH BM25: a TABLE of term-set queries ranked in ONE pass over
     * the index — [[servedBm25TopK]]'s scoring arithmetic verbatim
