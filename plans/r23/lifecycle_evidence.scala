@@ -81,6 +81,12 @@ object Evidence {
       "quick AND NOT cat").queryExecution.executedPlan.toString))
     save("plans/bm25.txt", norm(PhraseSearch.servedBm25TopK(spark, phTwo,
       Seq("quick", "fox"), k = 3).queryExecution.executedPlan.toString))
+    // the esperbench search_rw read shapes: a phrase AND (word OR NOT
+    // word), and BM25 over three terms
+    save("plans/boolean_bench.txt", norm(PhraseSearch.servedSearch(spark, phTwo,
+      "\"quick brown\" AND (fox OR NOT cat)").queryExecution.executedPlan.toString))
+    save("plans/bm25_bench.txt", norm(PhraseSearch.servedBm25TopK(spark, phTwo,
+      Seq("quick", "fox", "turtle"), k = 3).queryExecution.executedPlan.toString))
 
     // write plans, captured by a listener (the listener bus is asynchronous)
     val captured = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -25,7 +25,10 @@ object Bench {
     // conf, writes and cleanup all agree, and the exit hook reclaims it
     val warehouse = Files.createTempDirectory("graft_warehouse_")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try graft.queries.Q.rmTree(warehouse) catch { case _: Throwable => () }))
+      try graft.queries.Q.rmTree(warehouse) catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] could not remove the warehouse $warehouse: $e")
+      }))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -6,8 +6,8 @@ import graft.text.PhraseSearch
 import Q._
 
 /** Caption phrase/boolean search coverage (SURVEY §3.3 / §2 group 4):
-  * the reference's caption-index query language re-expressed as token
-  * windows + semi/anti joins. */
+  * the reference's caption-index query language re-expressed as
+  * position joins and one-pass boolean aggregates over the postings. */
 object PhraseQueries {
 
   val queries: Map[String, QFn] = Map(
@@ -491,7 +491,7 @@ object PhraseQueries {
     // PH39: WILDCARD terms in the boolean LANGUAGE — `cust* AND NOT
     // spark` served from the index: starred terms route through the
     // lexicon (ph32/ph38's pruning), exact terms keep their static
-    // buckets, and the evaluator's semi/anti joins are unchanged.
+    // buckets, and the one-pass evaluator is unchanged.
     // With ph38 this closes §3.3's wildcard story: prefix expansion,
     // wildcard phrases, and wildcard boolean all serve pruned.
     "ph39_wildcard_boolean" -> ((s, d) =>

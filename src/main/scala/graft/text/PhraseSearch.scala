@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * holds only one term's postings, never the full corpus. Round 1
   * windowed the whole token table per term (a full partitionBy(doc_id)
   * sort of every token for a single-word query); this is the posting-
-  * list form the reference's Rust caption index uses. Boolean operators
-  * become semi/anti joins on doc ids, which Catalyst executes as
-  * broadcast hash joins at dimension scale.
+  * list form the reference's Rust caption index uses. A boolean query
+  * is one pass over its postings: each leaf becomes a column of ONE
+  * `groupBy(doc_id)` aggregate and AND/OR/NOT a predicate over those
+  * columns (see [[search]]), the single posting-list pass the
+  * reference's caption index makes.
   */
 object PhraseSearch extends graft.index.VersionedIndex {
 
@@ -131,32 +133,53 @@ object PhraseSearch extends graft.index.VersionedIndex {
     * the whole score is map-side and the ordered LIMIT is a
     * TakeOrdered, never a global sort. The per-doc total adds the
     * per-term micro-integers in fixed term order — integer addition,
-    * nothing to reassociate. Input: docs (doc_id, text). */
+    * nothing to reassociate. Input: docs (doc_id, text). `terms` is a
+    * set: a repeated term scores once, as in [[servedBm25TopK]]. */
   def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int = 10): DataFrame = {
     require(terms.nonEmpty)
+    val ts = terms.distinct
     def tfCol(t: String): Column =
       size(filter(split(col("text"), " "), x => x === t)).cast("long")
-    val base = docs.select(col("doc_id") +:
+    bm25Rank(docs.select(col("doc_id") +:
       size(split(col("text"), " ")).cast("long").as("dl") +:
-      terms.zipWithIndex.map { case (t, i) => tfCol(t).as(s"tf$i") }: _*)
+      ts.zipWithIndex.map { case (t, i) => tfCol(t).as(s"tf$i") }: _*),
+      ts.size, k, None)
+  }
+
+  /** The per-(doc, term) BM25 micro-score: Robertson idf without the
+    * ln times the k1=6/5, b=3/4 tf part, one IEEE expression tree
+    * rounded to a BIGINT (see [[bm25TopK]]); 0 where the doc lacks the
+    * term. */
+  private def microScore(tf: Column, df: Column, dl: Column, n: Column,
+                         l: Column): Column = {
+    val idf = (lit(2) * (n - df) + lit(1)).cast("double") /
+      (lit(2) * df + lit(1)).cast("double")
+    val tfc = (lit(88.0) * tf * l) /
+      (lit(40.0) * tf * l + lit(12.0) * l + lit(36.0) * dl * n)
+    when(tf > 0, round(idf * tfc * lit(1000000)).cast("long")).otherwise(0L)
+  }
+
+  /** The corpus statistics of `perDoc` (doc_id, dl, tf0..tfN-1; one
+    * row per document of the corpus): N, L and each df_i, as ONE
+    * broadcast scalar aggregate over those rows. */
+  private def corpusStats(perDoc: DataFrame, nTerms: Int): DataFrame = {
     val aggs = count(lit(1)).as("n") +: sum(col("dl")).as("l") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
-    val tot = broadcast(base.agg(aggs.head, aggs.tail: _*))
-    val scored = base.crossJoin(tot)
-    def scCol(i: Int): Column = {
-      val idf = (lit(2) * (col("n") - col(s"df$i")) + lit(1)).cast("double") /
-        (lit(2) * col(s"df$i") + lit(1)).cast("double")
-      val tfc = (lit(88.0) * col(s"tf$i") * col("l")) /
-        (lit(40.0) * col(s"tf$i") * col("l") + lit(12.0) * col("l") +
-          lit(36.0) * col("dl") * col("n"))
-      when(col(s"tf$i") > 0,
-        round(idf * tfc * lit(1000000)).cast("long")).otherwise(0L)
-    }
-    scored
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .select(col("doc_id"),
-        terms.indices.map(scCol).reduce(_ + _).as("bm25_micro"))
+      (0 until nTerms).map(i => count(when(col(s"tf$i") > 0, 1)).as(s"df$i"))
+    broadcast(perDoc.agg(aggs.head, aggs.tail: _*))
+  }
+
+  /** Top-k by BM25 over `perDoc` (see [[corpusStats]]). `allowed`
+    * restricts the ranked candidates, never the statistics. */
+  private def bm25Rank(perDoc: DataFrame, nTerms: Int, k: Int,
+                       allowed: Option[DataFrame]): DataFrame = {
+    val tf = (0 until nTerms).map(i => col(s"tf$i"))
+    val candidates = perDoc.filter(tf.map(_ > 0).reduce(_ || _))
+    allowed.fold(candidates)(a =>
+        candidates.join(broadcast(a.select(col("doc_id"))), Seq("doc_id"), "left_semi"))
+      .crossJoin(corpusStats(perDoc, nTerms))
+      .select(col("doc_id"), tf.zipWithIndex.map { case (c, i) =>
+        microScore(c, col(s"df$i"), col("dl"), col("n"), col("l"))
+      }.reduce(_ + _).as("bm25_micro"))
       .orderBy(col("bm25_micro").desc, col("doc_id"))
       .limit(k)
   }
@@ -362,7 +385,7 @@ object PhraseSearch extends graft.index.VersionedIndex {
     * closed exact-word set, one pushed-down IN filter); [[Near]]'s are
     * its ANCHOR (left) positions that survive the window check, which
     * is what makes NEAR chain left and nest inside [[Within]]. */
-  private def posHits(q: Q, toks: DataFrame): DataFrame = q match {
+  private[graft] def posHits(q: Q, toks: DataFrame): DataFrame = q match {
     case Phrase(ws) => patternHits(toks, ws)
     case Infl(w) =>
       toks.filter(col("tok").isin(Inflect.expand(w): _*))
@@ -384,7 +407,7 @@ object PhraseSearch extends graft.index.VersionedIndex {
   /** Anchor positions of `a` that have SOME occurrence of `b` within
     * k — the same ±1 width-k bucket banding as [[proximityHits]]
     * (one equi key per within-k pair), deduped back to anchor rows. */
-  private def withinK(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
+  private[graft] def withinK(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     val aa = a.select(col("doc_id"), col("pos"),
       explode(array(expr(s"pos div $k - 1"), expr(s"pos div $k"),
         expr(s"pos div $k + 1"))).as("bk"))
@@ -395,32 +418,100 @@ object PhraseSearch extends graft.index.VersionedIndex {
       .select("doc_id", "pos").distinct()
   }
 
-  /** Compile a boolean query to the matching doc-id set.
-    * `universe` = all doc ids (needed for NOT). */
-  def eval(q: Q, toks: DataFrame, universe: DataFrame): DataFrame = q match {
-    case Phrase(ws) => patternHits(toks, ws).select("doc_id").distinct()
-    case i @ Infl(_) => posHits(i, toks).select("doc_id").distinct()
-    case nr @ Near(_, _, _) => posHits(nr, toks).select("doc_id").distinct()
-    case Within(parts, k) =>
-      // anchor-window: keep first-conjunct occurrences that have every
-      // other conjunct within k, then project to docs
-      parts.tail.foldLeft(posHits(parts.head, toks)) { (acc, p) =>
-        withinK(acc, posHits(p, toks), k)
-      }.select("doc_id").distinct()
-    case MinCount(x, n) =>
-      posHits(x, toks).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("__c")).filter(col("__c") >= n)
-        .select("doc_id")
-    case And(l, r) =>
-      eval(l, toks, universe).join(eval(r, toks, universe), Seq("doc_id"), "left_semi")
-    case Or(l, r) =>
-      eval(l, toks, universe).union(eval(r, toks, universe)).distinct()
-    case Not(x) =>
-      universe.join(eval(x, toks, universe), Seq("doc_id"), "left_anti")
+  /** The doc ids `q` matches, in ONE pass over `posts` (doc_id, pos,
+    * tok): each leaf becomes a column of one `groupBy(doc_id)`
+    * aggregate and the query a predicate over those columns.
+    *  - A one-slot leaf (a word, a `cust*` prefix, an `[infl]` family)
+    *    counts its matching rows; the leaf holds when the count is > 0,
+    *    and `{n}` when it is >= n.
+    *  - An n-slot phrase collects each slot's positions shifted back by
+    *    the slot index; the `array_intersect` of those arrays is the
+    *    phrase's start set (a position holds exactly one token, so set
+    *    semantics are exact), non-empty for a hit, of size >= n for
+    *    `{n}`.
+    *  - NEAR, `:: k` and any other position-bearing subtree keep
+    *    [[posHits]]/[[withinK]] over the same `posts` and join the
+    *    aggregate as marker rows: one doc-set bit each.
+    *  - AND, OR and NOT are `&&`, `||` and `!` over those columns.
+    *
+    * A doc with no row in `posts` has every leaf false, so `universe`
+    * (every doc id) is read only when the query is true with every leaf
+    * false (`NOT a`, `a OR NOT b`): it then enters the same aggregate as
+    * marker rows and the answer is restricted to it. */
+  private def evalOnePass(q: Q, posts: DataFrame,
+                          universe: => DataFrame): DataFrame = {
+    val names = scala.collection.mutable.Map[String, String]()
+    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
+    val sets = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // one aggregate column per distinct key, however often it is used
+    def column(key: String, agg: => Column): Column =
+      col(names.getOrElseUpdate(key, {
+        val name = s"__a${aggs.size}"; aggs += agg.as(name); name
+      }))
+    def rows(key: String, f: Column): Column = column(key, count(when(f, 1)))
+    def starts(ws: Seq[String]): Column = ws.zipWithIndex.map { case (w, i) =>
+      column(s"pos:$i:$w", collect_list(when(slotFilter(w), col("pos") - i)))
+    }.reduce(array_intersect(_, _))
+    def docSet(ids: DataFrame): Column = {
+      val i = sets.size
+      sets += ids.select(col("doc_id"), lit(i).as("__set"))
+      rows(s"set:$i", col("__set") === i) > 0
+    }
+    def leaf(x: Q): Column = x match {
+      case Phrase(Seq(w))              => rows(s"slot:$w", slotFilter(w)) > 0
+      case Phrase(ws)                  => size(starts(ws)) > 0
+      case Infl(w)                     => rows(s"infl:$w", inflFilter(w)) > 0
+      case MinCount(Phrase(Seq(w)), n) => rows(s"slot:$w", slotFilter(w)) >= n
+      case MinCount(Phrase(ws), n)     => size(starts(ws)) >= n
+      case MinCount(Infl(w), n)        => rows(s"infl:$w", inflFilter(w)) >= n
+      case MinCount(y, n) =>
+        docSet(posHits(y, posts).groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("__c")).filter(col("__c") >= n))
+      case Within(parts, k) =>
+        // anchor-window: first-conjunct occurrences with every other
+        // conjunct within k
+        docSet(parts.tail.foldLeft(posHits(parts.head, posts)) { (acc, p) =>
+          withinK(acc, posHits(p, posts), k)
+        }.select("doc_id").distinct())
+      case other => docSet(posHits(other, posts).select("doc_id").distinct())
+    }
+    // (predicate, its value when every leaf is false)
+    def compile(x: Q): (Column, Boolean) = x match {
+      case And(l, r) =>
+        val ((a, u), (b, v)) = (compile(l), compile(r)); (a && b, u && v)
+      case Or(l, r) =>
+        val ((a, u), (b, v)) = (compile(l), compile(r)); (a || b, u || v)
+      case Not(y) => val (a, u) = compile(y); (!a, !u)
+      case y      => (leaf(y), false)
+    }
+    val (pred, whenNoLeaf) = compile(q)
+    val where = if (whenNoLeaf) pred && docSet(universe.select("doc_id")) else pred
+    val tokens = posts.select("doc_id", "pos", "tok")
+    val input = if (sets.isEmpty) tokens else {
+      val blank = Seq(lit(null).cast(posts.schema("pos").dataType).as("pos"),
+        lit(null).cast("string").as("tok"))
+      sets.map(_.select(col("doc_id") +: blank :+ col("__set"): _*))
+        .foldLeft(tokens.withColumn("__set", lit(null).cast("int")))(_.unionByName(_))
+    }
+    input.groupBy(col("doc_id")).agg(aggs.head, aggs.tail.toSeq: _*)
+      .filter(where).select("doc_id")
   }
 
-  def search(query: String, toks: DataFrame, universe: DataFrame): DataFrame =
-    eval(parse(query), toks, universe)
+  private def inflFilter(w: String): Column = col("tok").isin(Inflect.expand(w): _*)
+
+  /** The doc ids a boolean query matches over the token table `toks`
+    * (doc_id, pos, tok); `universe` = every doc id, read only when the
+    * query can match a doc holding none of its words (`NOT a`,
+    * `a OR NOT b`). The table is first filtered to the query's
+    * vocabulary, then [[evalOnePass]] answers in one aggregate — the
+    * same evaluator [[servedSearch]] runs over the index. */
+  def search(query: String, toks: DataFrame, universe: DataFrame): DataFrame = {
+    val q = parse(query)
+    val (exact, prefixes) = vocabClasses(vocabOf(q).distinct)
+    val inVocab = (prefixes.map(p => col("tok").startsWith(p)) ++
+      Option.when(exact.nonEmpty)(col("tok").isin(exact: _*))).reduce(_ || _)
+    evalOnePass(q, toks.filter(inVocab), universe)
+  }
 
   // ---------------- persistent inverted index (build/serve) ---------
 
@@ -768,24 +859,30 @@ object PhraseSearch extends graft.index.VersionedIndex {
     patternHits(prunedPatternPostings(spark, dir, m, pattern, asOf), pattern)
   }
 
-  /** One postings scan per vocabulary KIND for a wildcard-capable
-    * word set: exact words read their statically pruned buckets,
-    * prefixes share one lexicon-routed scan. Exact words a prefix
-    * already covers are dropped from the exact scan so no physical
-    * row enters the union twice. */
-  private def prunedPatternPostings(spark: SparkSession, dir: String,
-                                    m: graft.index.Manifest,
-                                    words: Seq[String],
-                                    asOf: Option[Long]): DataFrame = {
+  /** A wildcard-capable word set by vocabulary KIND: the exact tokens
+    * and the prefixes its slots match (classification mirrors
+    * slotFilter: unescaped trailing star = prefix; `\*` = exact match
+    * on the literal star-ended token). Exact words a prefix already
+    * covers are dropped, so no token is matched by both kinds. */
+  private def vocabClasses(words: Seq[String]): (Seq[String], Seq[String]) = {
     require(words.nonEmpty)
     words.foreach(w => require(w != "*",
       "a bare * slot would scan the whole index"))
-    // classification mirrors slotFilter: unescaped trailing star =
-    // prefix; `\*` = exact match on the literal star-ended token
     val prefixes = words.flatMap(slotPrefix).distinct
     val exactVocab = words.filter(slotPrefix(_).isEmpty).map(slotExact)
       .distinct
       .filterNot(w => prefixes.exists(w.startsWith))
+    (exactVocab, prefixes)
+  }
+
+  /** One postings scan per vocabulary kind ([[vocabClasses]]): exact
+    * words read their statically pruned buckets, prefixes share one
+    * lexicon-routed scan; no physical row enters the union twice. */
+  private def prunedPatternPostings(spark: SparkSession, dir: String,
+                                    m: graft.index.Manifest,
+                                    words: Seq[String],
+                                    asOf: Option[Long]): DataFrame = {
+    val (exactVocab, prefixes) = vocabClasses(words)
     val scans = Seq(
       if (exactVocab.nonEmpty)
         Some(servedPostingsWith(spark, dir, m, exactVocab, asOf))
@@ -852,38 +949,44 @@ object PhraseSearch extends graft.index.VersionedIndex {
     case Not(x)           => vocabOf(x)
   }
 
-  /** [[search]] over a [[writeIndex]] layout: the boolean evaluator
-    * runs unchanged, but its postings come from the pruned vocabulary
-    * buckets and the NOT-universe from the doc-length sidecar — no
-    * corpus tokenize, no `documents` scan. A query over V distinct
-    * words reads ≤ V of nBuckets index partitions plus the doc-level
-    * metadata table. One manifest resolve per query: both reads serve
-    * the SAME snapshot even if maintenance commits mid-query. */
+  /** [[search]] over a [[writeIndex]] layout: the same one-pass
+    * evaluator ([[evalOnePass]]) over ONE read of the pruned,
+    * tombstone-filtered postings (exact words from their static
+    * buckets, `cust*` terms routed through the lexicon) — no corpus
+    * tokenize, no `documents` scan, no per-leaf re-read. The live
+    * doc-length sidecar is the universe, read only when the query can
+    * match a doc holding none of its words (`"a b" AND (c OR NOT d)`
+    * reads none). A query over V distinct
+    * words reads ≤ V of nBuckets index partitions. One manifest
+    * resolve per query: every read serves the SAME snapshot even if
+    * maintenance commits mid-query. */
   def servedSearch(spark: SparkSession, dir: String, query: String,
                    asOf: Option[Long] = None): DataFrame = {
     val q = parse(query)
     val m = Manifest.load(spark, dir)
-    // wildcard-capable vocabulary pruning: exact words keep their
-    // static bucket filters, `cust*` terms route through the lexicon
-    val posts = prunedPatternPostings(spark, dir, m, vocabOf(q).distinct, asOf)
-    // the NOT-universe must shrink with deletes too, or NOT-only
-    // queries would resurrect tombstoned docs
-    val universe =
-      liveOnly(doclenOf(spark, dir, m), spark, dir, m, asOf).select("doc_id")
-    eval(q, posts, universe)
+    // the universe must shrink with deletes too, or NOT-only queries
+    // would resurrect tombstoned docs
+    evalOnePass(q, prunedPatternPostings(spark, dir, m, vocabOf(q).distinct, asOf),
+      liveOnly(doclenOf(spark, dir, m), spark, dir, m, asOf).select("doc_id"))
   }
 
   /** [[bm25TopK]] over a [[writeIndex]] layout, arithmetic-identical
-    * (same per-(doc,term) integer micro-score — see bm25TopK's
-    * cross-engine exactness note) but with every input served from
-    * the index: tf = posting count per (doc, term) from the pruned
-    * vocabulary buckets, dl from the doclen sidecar, df/N/L as one
-    * broadcast scalar aggregate. The corpus-sized work is ONE scan of
-    * the term postings (~|terms|/nBuckets of the index) plus a
-    * doc_id equi-join against doclen; the ordered LIMIT stays a
-    * TakeOrdered. Per-doc totals sum BIGINT micro-scores, so the
-    * doc-grouped sum needs no term ordering. */
-  /** `allowed` (optional) = FILTERED ranking: an allow-list dimension
+    * (same per-(doc,term) integer micro-score, [[microScore]]) but with
+    * every input served from the index, in ONE `groupBy(doc_id)`
+    * aggregate: the pruned term postings (~|terms|/nBuckets of the
+    * index, read once) give tf_i per doc, and the live doclen rows,
+    * unioned into the same aggregate, give dl. N, L and every df_i are
+    * then one broadcast scalar aggregate over that aggregate's output
+    * (the shuffle is reused, so nothing re-reads the postings) and the
+    * ordered LIMIT stays a TakeOrdered. `terms` is a set: a repeated
+    * term scores once.
+    *
+    * Deletes shift the GLOBAL stats too: N/L/avgdl come from the live
+    * doclen rows, df from the live postings — exactly what a rebuild on
+    * the remaining corpus would compute (ph15's oracle); an as-of read
+    * scores with the SNAPSHOT's stats (ph24's oracle).
+    *
+    * `allowed` (optional) = FILTERED ranking: an allow-list dimension
     * of doc_ids (tenant / collection / license scoping) semi-joined
     * into the CANDIDATE rows before the top-k, so all k slots fill
     * with matching docs — while the corpus statistics (N, L, df)
@@ -895,34 +998,24 @@ object PhraseSearch extends graft.index.VersionedIndex {
                      k: Int = 10, asOf: Option[Long] = None,
                      allowed: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty)
-    val m = Manifest.load(spark, dir)
-    val tfAll = servedPostingsWith(spark, dir, m, terms.distinct, asOf)
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    // df comes from the UNFILTERED candidates (global stats contract)
-    val dfs = tfAll.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val tf = allowed.fold(tfAll)(a =>
-      tfAll.join(broadcast(a.select(col("doc_id"))), Seq("doc_id"), "left_semi"))
-    // deletes shift the GLOBAL stats too: N/L/avgdl come from the
-    // live doclen rows, df from the live tf rows — exactly what a
-    // rebuild on the remaining corpus would compute (ph15's oracle);
-    // an as-of read scores with the SNAPSHOT's stats (ph24's oracle)
+    val ts = terms.distinct
+    bm25Rank(servedPerDoc(spark, dir, Manifest.load(spark, dir), ts, asOf),
+      ts.size, k, allowed)
+  }
+
+  /** One row per live document (doc_id, dl, tf_i per term of `ts`) from
+    * ONE `groupBy(doc_id)` aggregate: the pruned term postings and the
+    * live doclen rows enter it as one union. */
+  private def servedPerDoc(spark: SparkSession, dir: String,
+                           m: graft.index.Manifest, ts: Seq[String],
+                           asOf: Option[Long]): DataFrame = {
+    val posts = servedPostingsWith(spark, dir, m, ts, asOf)
+      .select(col("doc_id"), col("tok"), lit(null).cast("long").as("dl"))
     val dl = liveOnly(doclenOf(spark, dir, m), spark, dir, m, asOf)
-    val tot = broadcast(dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("l")))
-    val idf = (lit(2) * (col("n") - col("df")) + lit(1)).cast("double") /
-      (lit(2) * col("df") + lit(1)).cast("double")
-    val tfc = (lit(88.0) * col("tf") * col("l")) /
-      (lit(40.0) * col("tf") * col("l") + lit(12.0) * col("l") +
-        lit(36.0) * col("dl") * col("n"))
-    tf.join(broadcast(dfs), "tok")
-      .join(dl, "doc_id")
-      .crossJoin(tot)
-      .select(col("doc_id"),
-        round(idf * tfc * lit(1000000)).cast("long").as("sc"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("sc")).as("bm25_micro"))
-      .orderBy(col("bm25_micro").desc, col("doc_id"))
-      .limit(k)
+      .select(col("doc_id"), lit(null).cast("string").as("tok"), col("dl"))
+    posts.unionByName(dl).groupBy(col("doc_id"))
+      .agg(max(col("dl")).as("dl"), ts.zipWithIndex.map { case (t, i) =>
+        count(when(col("tok") === t, 1)).as(s"tf$i") }: _*)
   }
 
   /** Doc ids the index SERVES at HEAD (tombstones applied) — the
@@ -934,45 +1027,39 @@ object PhraseSearch extends graft.index.VersionedIndex {
     liveIdsOf(spark, dir)
 
   /** BATCH BM25: a TABLE of term-set queries ranked in ONE pass over
-    * the index — [[servedBm25TopK]]'s scoring arithmetic verbatim
-    * (integer micro-scores, global N/L/df), but the union of all
-    * queries' vocabularies is read once (one pruned postings scan)
-    * and a broadcast (query_id, tok) dimension fans the tf rows out
-    * to their queries. df stays a per-TOKEN property, so one df table
-    * serves every query. The per-query top-k is a rank window over
-    * the scored (query, doc) pairs — the one shape where a window
-    * beats N TakeOrdereds, because the N=1 ordered-limit trick can't
-    * share the scan. ph34's oracle replays every step. */
+    * the index — [[servedBm25TopK]]'s scoring verbatim (the same
+    * per-doc aggregate over the union of all queries' vocabularies,
+    * the same scalar aggregate for N, L and every df, the same integer
+    * micro-scores). Each candidate doc's (tok, tf, df) triples are
+    * unrolled to rows and a broadcast (query_id, tok) dimension fans
+    * them out to their queries; df stays a per-TOKEN property, so one
+    * statistics row serves every query. The per-query top-k is a rank
+    * window over the scored (query, doc) pairs — the one shape where a
+    * window beats N TakeOrdereds, because the N=1 ordered-limit trick
+    * can't share the scan. ph34's oracle replays every step. */
   def servedBatchBm25TopK(spark: SparkSession, dir: String,
                           termSets: Seq[(Long, Seq[String])], k: Int = 10,
                           asOf: Option[Long] = None): DataFrame = {
     require(termSets.nonEmpty && termSets.forall(_._2.nonEmpty))
     import spark.implicits._
-    val m = Manifest.load(spark, dir)
     val terms = termSets
       .flatMap { case (q, ws) => ws.distinct.map(w => (q, w)) }
       .toDF("query_id", "tok")
     val vocab = termSets.flatMap(_._2).distinct
-    val tf = servedPostingsWith(spark, dir, m, vocab, asOf)
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val dl = liveOnly(doclenOf(spark, dir, m), spark, dir, m, asOf)
-    val tot = broadcast(dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("l")))
-    val idf = (lit(2) * (col("n") - col("df")) + lit(1)).cast("double") /
-      (lit(2) * col("df") + lit(1)).cast("double")
-    val tfc = (lit(88.0) * col("tf") * col("l")) /
-      (lit(40.0) * col("tf") * col("l") + lit(12.0) * col("l") +
-        lit(36.0) * col("dl") * col("n"))
+    val perDoc = servedPerDoc(spark, dir, Manifest.load(spark, dir), vocab, asOf)
+    val occurrences = inline(array(vocab.zipWithIndex.map { case (t, i) =>
+      struct(lit(t).as("tok"), col(s"tf$i").as("tf"), col(s"df$i").as("df"))
+    }: _*))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("bm25_micro").desc, col("doc_id"))
-    tf.join(broadcast(terms), "tok")
-      .join(broadcast(dfs), "tok")
-      .join(dl, "doc_id")
-      .crossJoin(tot)
+    perDoc.filter(vocab.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
+      .crossJoin(corpusStats(perDoc, vocab.size))
+      .select(col("doc_id"), col("dl"), col("n"), col("l"), occurrences)
+      .filter(col("tf") > 0)
+      .join(broadcast(terms), "tok")
       .select(col("query_id"), col("doc_id"),
-        round(idf * tfc * lit(1000000)).cast("long").as("sc"))
+        microScore(col("tf"), col("df"), col("dl"), col("n"), col("l")).as("sc"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("sc")).as("bm25_micro"))
       .withColumn("rank", row_number().over(w))

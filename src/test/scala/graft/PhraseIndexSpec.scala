@@ -100,6 +100,83 @@ class PhraseIndexSpec extends SparkSpec {
     assert(served === direct)
   }
 
+  test("BM25 terms are a set: a repeated term scores once on every form") {
+    val dir = freshIndex(16)
+    val once = PhraseSearch.bm25TopK(docs, Seq("quick", "dog"), 5).collect().toSeq
+    assert(once.nonEmpty)
+    val twice = Seq("quick", "dog", "quick")
+    assert(PhraseSearch.bm25TopK(docs, twice, 5).collect().toSeq === once,
+      "in-process BM25 counted a repeated term twice")
+    assert(PhraseSearch.servedBm25TopK(spark, dir, twice, 5).collect().toSeq === once,
+      "served BM25 counted a repeated term twice")
+    val batch = PhraseSearch.servedBatchBm25TopK(spark, dir, Seq(7L -> twice), 5)
+      .orderBy("rank").collect().map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[Long]("bm25_micro"))).toSeq
+    assert(batch === once.map(r => (r.getLong(0), r.getLong(1))),
+      "batch BM25 counted a repeated term twice")
+  }
+
+  /** The file scans of `df`'s executed plan, AQE query stages
+    * included; a reused stage counts once. */
+  private def fileScans(df: org.apache.spark.sql.DataFrame,
+                        component: String) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains(s"/$component/")) => s
+    }
+  }
+
+  /** Jobs a warm read starts (build, plan and collect), after a first
+    * read of the same shape has resolved the index segments. */
+  private def warmJobs(read: => org.apache.spark.sql.DataFrame): Int = {
+    read.collect()
+    jobsStartedBy(read.collect())
+  }
+
+  test("a served boolean read is one postings pass; doclen is read only when NOT can match a wordless doc") {
+    val dir = freshIndex(16)
+    // the benchmark's shape: a phrase AND (word OR NOT word)
+    val bench = "\"quick brown\" AND (fox OR NOT dog)"
+    val read = PhraseSearch.servedSearch(spark, dir, bench)
+    assert(read.collect().toSet ===
+      PhraseRef.search(bench, toks, docs.select("doc_id")).collect().toSet)
+    assert(fileScans(read, "postings").size === 1,
+      "the boolean read scans the postings more than once")
+    assert(fileScans(read, "doclen").isEmpty,
+      "a tree that is false with every leaf false read the doclen universe")
+    val jobs = warmJobs(PhraseSearch.servedSearch(spark, dir, bench))
+    assert(jobs <= 3, s"a warm boolean read started $jobs jobs")
+    val notLed = PhraseSearch.servedSearch(spark, dir, "NOT brown")
+    assert(notLed.collect().toSet ===
+      PhraseRef.search("NOT brown", toks, docs.select("doc_id")).collect().toSet)
+    assert(fileScans(notLed, "doclen").size === 1,
+      "a NOT-led read must take its universe from the live doclen")
+  }
+
+  test("a served BM25 read scans the postings once and runs at most 4 jobs") {
+    val dir = freshIndex(16)
+    val terms = Seq("quick", "dog", "turtle")
+    val read = PhraseSearch.servedBm25TopK(spark, dir, terms, 5)
+    assert(read.collect().toSeq ===
+      PhraseSearch.bm25TopK(docs, terms, 5).collect().toSeq)
+    assert(fileScans(read, "postings").size === 1,
+      "the BM25 read scans the postings more than once (df re-read?)")
+    val jobs = warmJobs(PhraseSearch.servedBm25TopK(spark, dir, terms, 5))
+    assert(jobs <= 4, s"a warm BM25 read started $jobs jobs")
+    val batch = PhraseSearch.servedBatchBm25TopK(spark, dir,
+      Seq(1L -> Seq("quick", "dog"), 2L -> Seq("turtle")), 5)
+    batch.collect()
+    assert(fileScans(batch, "postings").size === 1,
+      "the batch BM25 read scans the postings more than once (df re-read?)")
+  }
+
   test("appendIndex: build+append serves identically to a full rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("phrase_idx_").toString
     PhraseSearch.writeIndex(toks.filter(col("doc_id") % 2 === 0), dir, 16)
@@ -330,17 +407,44 @@ class PhraseIndexSpec extends SparkSpec {
     // COMBINATION — juxtaposed phrases inside NEAR, counts on
     // [groups], NOT over proximity — not just the hand-picked cases
     // above. Both sides parse the same rendered string, so parser,
-    // in-process evaluator and served evaluator are all pinned to
-    // one another.
+    // the join-tree reference evaluator (PhraseRef) and the served
+    // one-pass evaluator are pinned to one another.
     val dir = freshIndex(16)
-    val pool = Seq("quick", "brown", "fox", "dog", "turtle", "the",
-      "slow", "zebra")
     val universe = docs.select("doc_id")
-    PhraseGen.samples(PhraseGen.tree(pool, 3), 100).foreach { q =>
+    PhraseGen.samples(PhraseGen.tree(parityPool, 3), 100).foreach { q =>
       val str = PhraseGen.render(q)
-      val direct = PhraseSearch.search(str, toks, universe).collect().toSet
+      val direct = PhraseRef.search(str, toks, universe).collect().toSet
       val served = PhraseSearch.servedSearch(spark, dir, str).collect().toSet
       assert(served === direct, s"serve parity diverged for [$str]")
+    }
+  }
+
+  private val parityPool = Seq("quick", "brown", "fox", "dog", "turtle",
+    "the", "slow", "zebra")
+
+  test("randomized grammar serve parity over a multi-segment index with tombstones") {
+    // the served universe is the LIVE doclen and only NOT-led trees
+    // read it, so run the same 100 ASTs plus NOT-led and OR-NOT trees
+    // over a build + append + delete index (two segments per
+    // component, tombstones), at HEAD and at the pre-delete snapshot
+    val dir = java.nio.file.Files.createTempDirectory("phrase_par_").toString
+    PhraseSearch.writeIndex(toks.filter(col("doc_id") <= 2), dir, 16)
+    PhraseSearch.appendIndex(toks.filter(col("doc_id") > 2), dir)
+    val beforeDelete = PhraseSearch.currentSeq(spark, dir)
+    PhraseSearch.deleteFromIndex(Seq(2L, 5L).toDF("doc_id"), dir)
+    val live = toks.filter(!col("doc_id").isin(2L, 5L))
+    val queries = PhraseGen.samples(PhraseGen.tree(parityPool, 3), 100)
+      .map(PhraseGen.render) ++ Seq("NOT brown", "NOT zebra",
+        "NOT (quick AND dog)", "fox OR NOT dog", "\"quick brown\" OR NOT turtle",
+        "NOT the AND NOT slow", "(NOT fox) OR (turtle AND NOT dog)")
+    for ((asOf, want) <- Seq((None, live), (Some(beforeDelete), toks))) {
+      val universe = want.select("doc_id").distinct()
+      queries.foreach { str =>
+        val direct = PhraseRef.search(str, want, universe).collect().toSet
+        val served = PhraseSearch.servedSearch(spark, dir, str, asOf = asOf)
+          .collect().toSet
+        assert(served === direct, s"serve parity diverged for [$str] at $asOf")
+      }
     }
   }
 
