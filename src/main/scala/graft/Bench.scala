@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR (default sf0.1) on local[32].
+  * SPARK_GRAFT_SF_DIR (default sf0.1) on a [[Sessions.build]] session
+  * (local[SPARK_GRAFT_CPUS], default 32).
   *
   * Timing forces full materialization through the `noop` write sink so
   * final sorts/projections are measured (a bare `count()` lets Catalyst's
@@ -14,45 +15,61 @@ import org.apache.spark.sql.SparkSession
   * sbt log truncation.
   */
 object Bench {
+  /** Queries run once, untimed, before the timed passes (those in the
+    * run's selection only).
+    *
+    * t05 warms the explode/two-level-agg simhash pipeline (codegen +
+    * JIT) that t05/t06 share — without it, whichever of the two runs
+    * first absorbs ~3-4 s of one-time compilation into its measurement.
+    * t03 likewise warms the jaccardPairs inverted-index + localCheckpoint
+    * machinery shared by t14/t15/t37/t38/t42 (first cold run measured
+    * ~2.9x the warm min on whichever of those shuffles first).
+    * t04 additionally warms the minhash/band path t60 re-runs, and
+    * st07 the two-phase prefix-sum machinery (a28/a30/t12/t48/t58) —
+    * without them, whichever of those queries lands first in pass 1
+    * absorbs a 10-30 s cold hit (r10 measured t60 at 37 s cold vs
+    * 3.1 s warm; the min-estimator hides it, the samples don't).
+    * The served/appended index queries run once untimed so their
+    * one-time memoized index builds (Q.memoIndex) happen here — every
+    * timed sample then measures SERVE latency alone; the build costs
+    * are reported separately (index_build_sec in the JSON). */
+  val warmups: Seq[String] = Seq(
+    "j01_equi_join_agg", "t01_exact_dedup", "v01_cosine_topk", "r01_coalesce",
+    "t05_simhash", "t03_shingle_jaccard", "t04_minhash_lsh",
+    "st07_peak_concurrency",
+    "ph06_served_phrase", "ph10_appended_phrase", "ph11_compacted_phrase",
+    // deletion/upsert lifecycle: ph15 shares phdel with ph14, ph18
+    // shares phups with ph17 — one warmup per memoized index tag
+    "ph13_index_audit", "ph14_deleted_phrase", "ph16_reclaimed_phrase",
+    "ph17_upserted_phrase", "ph19_synced_phrase", "ph21_merged_phrase",
+    "v29_ivf_served", "v30_ivf_appended", "v31_ivf_compacted",
+    "v32_ivf_deleted", "v33_ivf_reclaimed", "v34_ivf_upserted",
+    "v35_ivf_merged",
+    // rollback/refresh/vacuum generations: ph27 shares phrbk w/ ph26
+    "ph26_rollback_phrase", "v39_ivf_rollback", "v40_ivf_refreshed",
+    "ph29_vacuumed_phrase", "v43_ivf_vacuumed",
+    "st16_stream_index_parity", "st17_stream_cdc_parity",
+    "st18_stream_ivf_parity", "st19_stream_reencode_parity",
+    // the parity fixtures' staged inputs are memoized per corpus
+    // (stagedInput) — warm each distinct staging tag so no pass-1
+    // sample absorbs a fixture build (st21/st24 share st14's tag)
+    "st14_stream_coalesce_parity", "st15_stream_asof_parity",
+    "st20_stream_density_parity", "st22_stream_late_drop",
+    "st23_stream_stream_join",
+    // cross-plane pairs (xpl/xpl2) and the PQ tier (ivfpq) build in
+    // their own memo tags — unwarmed, their pass-1 sample absorbed
+    // the build and polluted `spread` (r15 verdict nit #1: x07 22.7x)
+    "x07_cross_plane_takedown", "x08_cross_plane_reencode",
+    "v48_ivf_pq_served",
+    // the GC-history scenario builds its own memo tag (phgc) — the
+    // r15 bench-spread nit recurred on it in r16 (67.6x first-sample
+    // spread from the 4.5 s scenario build landing in pass 1)
+    "ph42_manifest_gc")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    // per-run warehouse: two concurrent bench runs on one box must not
-    // clobber each other's managed tables, and getOrCreate reusing an
-    // existing session would silently ignore a fixed-path conf while
-    // cleanup still targeted it (ADVICE r19) — a fresh temp dir makes
-    // conf, writes and cleanup all agree, and the exit hook reclaims it
-    val warehouse = Files.createTempDirectory("graft_warehouse_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try graft.queries.Q.rmTree(warehouse) catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] could not remove the warehouse $warehouse: $e")
-      }))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: the default 100-entry compiled-class cache thrashes
-      // across a 100+-query corpus (hundreds of generated classes), so
-      // queries late in the run re-pay janino compilation they already
-      // did — t05 measured 0.6 s standalone vs 2.2 s mid-run
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.ui.enabled", "false")
-      // the layout section's bucketed catalog tables land here, not in
-      // the repo working dir
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // drop ONLY the expected per-unpersist truncation WARN from freed
-    // CC checkpoints (message-scoped regex filter — ADVICE r7: a
-    // whole-logger ERROR override also hid unexpected RDD warnings)
-    graft.util.LogFilters.suppressExpectedCheckpointTruncationWarns()
-    // the per-pass cache rebuild after clearCache re-registers the same
-    // query-internal cached frames — CacheManager's "already cached"
-    // WARN per pass is expected; keep the tail readable
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.build()
     // warmup (untimed): touch every table (which also resolves it once
     // for the session, so timed builds start no load job) and run
     // representative query shapes so the first timed query doesn't
@@ -63,62 +80,10 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup table $t failed: ${e.getMessage}") }
     }
-    // t05 warms the explode/two-level-agg simhash pipeline (codegen +
-    // JIT) that t05/t06 share — without it, whichever of the two runs
-    // first absorbs ~3-4 s of one-time compilation into its measurement.
-    // t03 likewise warms the jaccardPairs inverted-index + localCheckpoint
-    // machinery shared by t14/t15/t37/t38/t42 (first cold run measured
-    // ~2.9x the warm min on whichever of those shuffles first).
-    // t04 additionally warms the minhash/band path t60 re-runs, and
-    // st07 the two-phase prefix-sum machinery (a28/a30/t12/t48/t58) —
-    // without them, whichever of those queries lands first in pass 1
-    // absorbs a 10-30 s cold hit (r10 measured t60 at 37 s cold vs
-    // 3.1 s warm; the min-estimator hides it, the samples don't)
-    // The four served/appended index queries run once untimed so their
-    // one-time memoized index builds (Q.memoIndex) happen here — every
-    // timed sample then measures SERVE latency alone; the build costs
-    // are reported separately (index_build_sec below).
     // SPARK_GRAFT_BENCH_ONLY: comma-separated name prefixes for targeted
-    // local iteration (e.g. "t03,t04,v05"); absent = the full corpus.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty) // unset OR empty -> full corpus
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    val warmups = Seq(
-      "j01_equi_join_agg", "t01_exact_dedup", "v01_cosine_topk", "r01_coalesce",
-      "t05_simhash", "t03_shingle_jaccard", "t04_minhash_lsh",
-      "st07_peak_concurrency",
-      "ph06_served_phrase", "ph10_appended_phrase", "ph11_compacted_phrase",
-      // deletion/upsert lifecycle: ph15 shares phdel with ph14, ph18
-      // shares phups with ph17 — one warmup per memoized index tag
-      "ph13_index_audit", "ph14_deleted_phrase", "ph16_reclaimed_phrase",
-      "ph17_upserted_phrase", "ph19_synced_phrase", "ph21_merged_phrase",
-      "v29_ivf_served", "v30_ivf_appended", "v31_ivf_compacted",
-      "v32_ivf_deleted", "v33_ivf_reclaimed", "v34_ivf_upserted",
-      "v35_ivf_merged",
-      // rollback/refresh/vacuum generations: ph27 shares phrbk w/ ph26
-      "ph26_rollback_phrase", "v39_ivf_rollback", "v40_ivf_refreshed",
-      "ph29_vacuumed_phrase", "v43_ivf_vacuumed",
-      "st16_stream_index_parity", "st17_stream_cdc_parity",
-      "st18_stream_ivf_parity", "st19_stream_reencode_parity",
-      // the parity fixtures' staged inputs are memoized per corpus
-      // (stagedInput) — warm each distinct staging tag so no pass-1
-      // sample absorbs a fixture build (st21/st24 share st14's tag)
-      "st14_stream_coalesce_parity", "st15_stream_asof_parity",
-      "st20_stream_density_parity", "st22_stream_late_drop",
-      "st23_stream_stream_join",
-      // cross-plane pairs (xpl/xpl2) and the PQ tier (ivfpq) build in
-      // their own memo tags — unwarmed, their pass-1 sample absorbed
-      // the build and polluted `spread` (r15 verdict nit #1: x07 22.7x)
-      "x07_cross_plane_takedown", "x08_cross_plane_reencode",
-      "v48_ivf_pq_served",
-      // the GC-history scenario builds its own memo tag (phgc) — the
-      // r15 bench-spread nit recurred on it in r16 (67.6x first-sample
-      // spread from the 4.5 s scenario build landing in pass 1)
-      "ph42_manifest_gc")
+    // local iteration (e.g. "t03,t04,v05"); unset or empty = the full corpus.
+    val only = Sessions.envPrefixes("SPARK_GRAFT_BENCH_ONLY")
+    val selected = Sessions.select(only)
     // targeted runs warm only what they measure — a 1-query iteration
     // loop must not pay 13 index builds it never serves from
     warmups.filter(selected.contains).foreach { n =>
@@ -284,16 +249,7 @@ object Bench {
       if (good.nonEmpty) Some(n -> good.min) else None
     }
     val resultMap = results.toMap
-    // explicit Locale.ROOT: the f"" interpolator is default-locale
-    // sensitive, and a comma-decimal locale would emit invalid JSON
-    def num3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // JSON string escape (error messages, exchange-key expressions)
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Sessions.{jsonStr, num3}
     // ---- corpus-level bucketed-layout bench (r18 verdict ask #5) ----
     // StorageSpec proves bucketing kills the join/agg exchange on toy
     // tables; this measures it on the REAL corpus queries: the shuffle-
@@ -318,13 +274,8 @@ object Bench {
       import graft.sources.Tables
       val pre = "graft_"
       def pq(n: String) = Tables.load(spark, sfDir, n)
-      // the warehouse is a fresh per-run temp dir, but clear any table
-      // dirs defensively (a re-entrant layoutSection call in one JVM
-      // would otherwise hit "location already exists")
-      Seq("lineitem", "orders", "events", "customer", "documents",
-        "embeddings").foreach { t =>
-        graft.queries.Q.rmTree(warehouse.resolve(pre + t))
-      }
+      // the tables land in the session's fresh per-run temp warehouse
+      // (Sessions.build), so no earlier run's table dirs can collide
       val lt0 = System.nanoTime()
       Tables.writeBucketed(pq("lineitem"), pre + "lineitem", "l_orderkey",
         32, Seq("l_orderkey", "l_linenumber"))
@@ -335,8 +286,8 @@ object Bench {
       Tables.writeBucketed(pq("customer"), pre + "customer", "c_custkey",
         32, Seq("c_custkey"))
       // r20: the t/v exclusion ("their shuffle keys are derived") was
-      // TESTED via graft.LayoutAudit and found wrong for 26 of 91
-      // rows — a doc_id/vec_id bucketing removes real exchanges (t44
+      // TESTED by a plan-only t/v audit (since folded into this
+      // section) and found wrong for 26 of 91 rows — a doc_id/vec_id bucketing removes real exchanges (t44
       // 13->0, t05 4->0: the per-doc aggregate/join legs AROUND the
       // derived-key stages ride the table key). Documents and
       // embeddings are bucketed too and the t/v families swept.
@@ -407,7 +358,7 @@ object Bench {
         // remove — each remaining shuffle names itself (a rollup on a
         // non-bucket dim, a derived key, a second join key)
         val keys = if (exB.isEmpty) "" else
-          s""","bucketed_exchange_keys":${exB.map(jq).mkString("[", ",", "]")}"""
+          s""","bucketed_exchange_keys":${exB.map(jsonStr).mkString("[", ",", "]")}"""
         s""""$n":{"parquet_sec":$pqSec,"bucketed_sec":$bkSec,""" +
           s""""parquet_hash_exchanges":${exP.size},""" +
           s""""bucketed_hash_exchanges":${exB.size}$keys}"""
@@ -433,13 +384,13 @@ object Bench {
       s"\"" + k + "\":" +
         vs.map(_.map(num3).getOrElse("null")).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val failedJson = failed.map { case (k, v) => jq(k) + ":" + jq(v) }
+    val failedJson = failed.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // a prefix-filtered run must not clobber the full-corpus gate
     // artifact with a partial total: divert to a .partial file unless
     // an output path was given explicitly, and mark the JSON
-    val partial = only.isDefined
+    val partial = only.nonEmpty
     val effOut =
       if (partial && sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty)
         outPath + ".partial" else outPath

@@ -1,31 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-quality inspection: prints formatted physical plans for
-  * representative queries so pushdown/broadcast/codegen can be audited
-  * (run: `runMain graft.Explain [sfDir] [query...]`). */
+/** Plan-quality inspection: prints formatted physical plans for the
+  * queries whose names start with one of the given prefixes (all of
+  * them when none are given) so pushdown/broadcast/codegen can be
+  * audited (run: `runMain graft.Explain [sfDir] [prefix...]`). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("j01_equi_join_agg", "p04_filter_compare", "r01_coalesce",
-        "j08_overlap_clip_first", "a02_group_sum", "t04_minhash_lsh",
-        "x06_asof_join", "v08_int8_ann", "t06_simhash_pairs",
-        "t25_span_dedup", "t26_bloom_decontam", "a20_kmv_sketch",
-        "p13_hash_sample", "t29_span_removal", "t21_decontaminate",
-        "t31_align_pairs", "v13_opq_topk",
-        "ph06_served_phrase", "ph09_served_bm25", "v29_ivf_served",
-        "ph12_hybrid_fusion", "t63_corpus_diff")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    val spark = Sessions.build()
+    Sessions.select(args.drop(1).toSeq).keys.toSeq.sorted.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }

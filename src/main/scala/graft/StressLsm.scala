@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** LSM depth stress (r15 VERDICT ask #6): how serve latency grows with
@@ -19,13 +18,7 @@ import org.apache.spark.sql.functions._
 object StressLsm {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build()
     val base = java.nio.file.Files.createTempDirectory("lsm_stress_")
     val dir = base.resolve("idx").toString
     val toks = graft.queries.Q.toks(spark, sfDir)
@@ -46,7 +39,7 @@ object StressLsm {
         (System.nanoTime() - t0) / 1e9
       }.min
 
-    def num3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Sessions.num3
     val depths = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     depths += ((nSegs(), serveSec()))
     val record = Set(4, 8, 16, 24)

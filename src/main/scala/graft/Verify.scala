@@ -1,48 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER (additive, default unchanged): lets the
-    // twice-deferred multi-executor correctness run (VERDICT r20 ask
-    // #5) use local-cluster[2,16,*] so broadcasts/repartitions cross a
-    // real executor boundary at least once per round
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // local-cluster executors are SEPARATE JVMs launched by the
-    // in-process worker: they need this JVM's classpath (sbt-managed,
-    // no assembly jar) and a real heap to run the corpus
-    val builder0 = SparkSession.builder().master(master)
-    val builder =
-      if (master.startsWith("local-cluster")) builder0
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
-      else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: avoid compiled-class cache thrash across 100+ queries
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // deliberate unpersist of superseded CC checkpoints WARNs per
-    // round — expected; drop only that message (regex filter), not the
-    // whole logger (ADVICE r7)
-    graft.util.LogFilters.suppressExpectedCheckpointTruncationWarns()
+    // SPARK_GRAFT_MASTER: lets a multi-executor correctness run (VERDICT
+    // r20 ask #5) use local-cluster[2,16,*] so broadcasts/repartitions
+    // cross a real executor boundary at least once per round
+    val spark = Sessions.build(master = sys.env.get("SPARK_GRAFT_MASTER"))
     new java.io.File(outDir).mkdirs()
-    // iteration aid (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): run only
+    // iteration aid (as Bench's SPARK_GRAFT_BENCH_ONLY): run only
     // queries matching the comma-separated name prefixes; unset = all.
-    val only = sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", "").trim
-    val prefixes = only.split(",").map(_.trim).filter(_.nonEmpty)
-    val selected =
-      if (prefixes.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
+    val selected = Sessions.select(Sessions.envPrefixes("SPARK_GRAFT_VERIFY_ONLY"))
     // Failed queries MUST leave a loud trace in the artifact tree: the
     // round-9 testdata regen crashed 39 queries and this loop's old
     // stderr-only catch made them silently ABSENT from the correctness
@@ -84,23 +54,12 @@ object Verify {
       // the measured r6 leak)
       graft.util.Checkpoints.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Sessions.jsonStr
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val fjson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failures.json"), fjson)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} quer(ies) FAILED: " +

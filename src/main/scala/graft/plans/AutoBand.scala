@@ -22,19 +22,20 @@ import org.apache.spark.sql.types.LongType
   * output exprIds so parent references stay valid).
   *
   * Opt-in via `spark.graft.autoband.width` (band width, 0 = off;
-  * reset to 0 by Q.tune so it is per-query scoped), with an optional
-  * `spark.graft.autoband.minbytes` gate on both join children's
-  * estimated size. `width=auto` derives the band width from CBO column
-  * statistics instead (round-2 roadmap): with
-  * `spark.sql.cbo.enabled=true` and ANALYZE'd bound columns, the
-  * timeline span max(end)-min(start) across both sides is divided into
-  * `spark.graft.autoband.targetbands` buckets (default 256 — a few
-  * bands per shuffle partition); when any bound lacks stats the join is
-  * left alone rather than banded blind. Assumes half-open valid
-  * intervals (e > s), like bandedOverlaps: rows with e <= s are
-  * dropped before banding.
+  * reset to 0 by Q.tune so it is per-query scoped). `width=auto`
+  * derives the band width from CBO column statistics instead (round-2
+  * roadmap): with `spark.sql.cbo.enabled=true` and ANALYZE'd bound
+  * columns, the timeline span max(end)-min(start) across both sides is
+  * divided into [[AutoBandOverlapJoin.TargetBands]] buckets; when any
+  * bound lacks stats the join is left alone rather than banded blind.
+  * Assumes half-open valid intervals (e > s), like bandedOverlaps: rows
+  * with e <= s are dropped before banding.
   */
 object AutoBandOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** Bands a `width=auto` join's timeline is split into: a few bands
+    * per shuffle partition. */
+  val TargetBands = 256L
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val ws = conf.getConfString("spark.graft.autoband.width", "0")
@@ -58,7 +59,6 @@ object AutoBandOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   private def rewrite(j: Join, ws: String): Option[LogicalPlan] = {
-    val minBytes = BigInt(conf.getConfString("spark.graft.autoband.minbytes", "0"))
     val cond = j.condition.get
     val conjuncts = splitConjunctivePredicates(cond)
     if (conjuncts.length != 3) return None
@@ -83,14 +83,8 @@ object AutoBandOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
     val p2 = ineqs.find { case (x, y) => fromLeft(x) && fromRight(y) }
     (p1, p2) match {
       case (Some((rs, le)), Some((ls, re))) if p1 != p2 =>
-        if (minBytes > 0 &&
-            (j.left.stats.sizeInBytes < minBytes ||
-             j.right.stats.sizeInBytes < minBytes)) return None
         val w: Long =
           if (ws == "auto") {
-            val target = math.max(1L,
-              scala.util.Try(conf.getConfString(
-                "spark.graft.autoband.targetbands", "256").toLong).getOrElse(256L))
             (for {
               (ls0, _) <- colMinMax(j.left, ls)
               (_, le1) <- colMinMax(j.left, le)
@@ -98,7 +92,7 @@ object AutoBandOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
               (_, re1) <- colMinMax(j.right, re)
             } yield {
               val span = math.max(le1, re1) - math.min(ls0, rs0)
-              math.max(1L, span / target)
+              math.max(1L, span / TargetBands)
             }) match {
               case Some(width) => width
               case None => return None // no stats -> don't band blind

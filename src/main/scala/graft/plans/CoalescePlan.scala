@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.LongType
   * per-partition ordering and merges islands in a single streaming
   * sweep — Spark's planner inserts exactly one exchange + sort, and the
   * sweep is O(n) with O(1) state per key group. Registered through
-  * [[CoalesceIntervalsStrategy]] (see Q.tune / GraftExtensions).
+  * [[CoalesceIntervalsStrategy]], which [[CoalescePlan.coalesceNative]]
+  * installs on its session (CoalescePlan.install).
   *
   * Semantics are identical to IntervalOps.coalesce(df, c, gap):
   * merge intervals that overlap or touch, closing gaps <= gap

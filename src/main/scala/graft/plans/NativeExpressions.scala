@@ -89,7 +89,8 @@ object GraftFunctions {
     Bridge.column(MaxMultiplicity(Bridge.expression(arr)))
 
   /** Register the SQL functions (idempotent; per-session — skip when
-    * already present to avoid a per-call replace warning). */
+    * already present to avoid a per-call replace warning). `Q.tune`
+    * calls this at every query entry, the one way they reach a session. */
   def register(spark: SparkSession): Unit = {
     def put(name: String, builder: Seq[Expression] => Expression): Unit = {
       val id = new org.apache.spark.sql.catalyst.FunctionIdentifier(name)
@@ -105,58 +106,5 @@ object GraftFunctions {
     put("token_edit_distance", es => TokenEditDistance(es(0), es(1)))
     put("nfc_normalize", es => NfcNormalize(es(0)))
     put("max_multiplicity", es => MaxMultiplicity(es(0)))
-  }
-}
-
-/** SparkSessionExtensions entry point: build sessions with
-  * `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) to get the whole
-  * library — native SQL functions, the auto-banding optimizer rule and
-  * the native-coalesce planner strategy — without per-session
-  * registration calls. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("overlap_seconds"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[OverlapSeconds].getName, "overlap_seconds"),
-      (exprs: Seq[Expression]) => OverlapSeconds(exprs(0), exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_norm2"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecNorm2].getName, "vec_norm2"),
-      (exprs: Seq[Expression]) => VecNorm2(exprs(0))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_cosine"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecCosine].getName, "vec_cosine"),
-      (exprs: Seq[Expression]) => VecCosine(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs(0))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("token_edit_distance"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TokenEditDistance].getName, "token_edit_distance"),
-      (exprs: Seq[Expression]) => TokenEditDistance(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("max_multiplicity"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MaxMultiplicity].getName, "max_multiplicity"),
-      (exprs: Seq[Expression]) => MaxMultiplicity(exprs(0))))
-    e.injectOptimizerRule(_ => AutoBandOverlapJoin)
-    e.injectPlannerStrategy(_ => CoalesceIntervalsStrategy)
   }
 }

@@ -81,7 +81,7 @@ object Q {
 
   /** The ph rows that run IN-PROCESS over the documents/token tables —
     * the only ph rows a table-layout change can affect, so the only
-    * ones the layout sweep and audit run (r21, VERDICT r20 nit #1:
+    * ones Bench's layout section runs (r21, VERDICT r20 nit #1:
     * the whole family was previously excluded without an audit).
     * Every other ph row serves from the persisted index (including
     * ph28/ph35, whose side table reads ride behind an index serve that
@@ -92,9 +92,8 @@ object Q {
 
   /** Queries whose SERVE path reads a persisted index layout, not the
     * catalog tables — running them against a `catalog:` dir would
-    * measure a pointless index rebuild keyed on the dir string, so the
-    * layout sweep (Bench) and the layout audit (LayoutAudit) skip
-    * them. One list, two consumers. (The ph family is handled by
+    * measure a pointless index rebuild keyed on the dir string, so
+    * Bench's layout section skips them. (The ph family is handled by
     * [[layoutInProcessPh]] — a whitelist is tighter than enumerating
     * its 42 served rows here.) */
   val layoutIdxBacked: Set[String] = Set(

@@ -46,11 +46,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Register every table as a temp view so `spark.sql` works against the
-    * same names the DuckDB oracle uses. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   // ------------------------------------------------------------------
   // 100 TB storage layout (SURVEY §7.4): interval-heavy tables bucketed
   // by their join key so per-key interval ops co-locate without an

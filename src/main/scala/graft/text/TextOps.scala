@@ -332,25 +332,11 @@ object TextOps {
     * index is what gets shipped at 100 TB, not the full postings.
     * Fully per-row columnar; callers explode only the (small)
     * selected set to build the index. Codegen'd native expression
-    * ([[graft.plans.WinnowFps]]); [[winnowHof]] is the built-in-
-    * functions form it replaced (bit-equal — TextOpsSpec). */
+    * ([[graft.plans.WinnowFps]]); `TextOpsSpec.winnowHof` is the
+    * built-in-functions form it replaced (bit-equal — TextOpsSpec). */
   def winnow(text: Column, k: Int, w: Int): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.plans.WinnowFps(Bridge.expression(text), k, w))
-  }
-
-  /** Reference form of [[winnow]]: interpreted lambda per gram and per
-    * window — kept as the spec cross-check oracle. */
-  def winnowHof(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val grams = Bridge.column(graft.plans.Shingles(Bridge.expression(text), k))
-    val h = transform(grams, g => fingerprint(g))
-    val n = size(h)
-    when(n > 0,
-      array_distinct(transform(
-        sequence(lit(1), greatest(n - (w - 1), lit(1))),
-        j => array_min(slice(h, j, lit(w))))))
-      .otherwise(array().cast("array<bigint>"))
   }
 
   /** Word-level alignment over an arbitrary candidate pair set — the
@@ -535,20 +521,12 @@ object TextOps {
 
   /** Polynomial rolling hash of the full text, mod 1e9+7 — a stable
     * document fingerprint (content-defined identity). Codegen'd native
-    * expression ([[graft.plans.RollingHash]]); [[fingerprintHof]] is the
-    * built-in-functions form it replaced (bit-equal — HashExprSpec). */
+    * expression ([[graft.plans.RollingHash]]); `HashExprSpec.fingerprintHof`
+    * is the built-in-functions form it replaced (bit-equal — HashExprSpec). */
   def fingerprint(text: Column): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.plans.RollingHash(Bridge.expression(text)))
   }
-
-  /** Reference form of [[fingerprint]]: interpreted lambda + one array
-    * slot per character — kept as the spec cross-check oracle. */
-  def fingerprintHof(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), c => ascii(c).cast("long")),
-      lit(0L),
-      (acc, x) => (acc * 31 + x) % 1000000007L)
 
   /** Quality-score components (length/uniqueness/token stats) — the
     * pure-expression form of per-doc quality filters. */

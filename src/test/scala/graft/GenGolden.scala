@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** One-shot (re)generator for the committed widget golden files:
   * `sbt "Test/runMain graft.GenGolden"`. Only run this DELIBERATELY
@@ -10,11 +9,9 @@ import org.apache.spark.sql.SparkSession
   * regenerating to silence [[WidgetGoldenSpec]] defeats the gate. */
 object GenGolden {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the suites' own session, so the goldens are written under the
+    // configuration WidgetGoldenSpec checks them with
+    val spark = SparkSpec.spark
     val dir = Paths.get("src/test/resources/golden")
     Files.createDirectories(dir)
     WidgetGoldenFixtures.shapes(spark).foreach { case (name, json) =>

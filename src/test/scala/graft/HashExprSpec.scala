@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.plans.GraftFunctions
 import graft.text.TextOps
@@ -23,7 +24,7 @@ class HashExprSpec extends SparkSpec {
     val df = samples.toDF("text")
     val rows = df.select(
         TextOps.fingerprint($"text").as("native"),
-        TextOps.fingerprintHof($"text").as("hof"))
+        HashExprSpec.fingerprintHof($"text").as("hof"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1), r.toString))
   }
@@ -33,7 +34,7 @@ class HashExprSpec extends SparkSpec {
     val viaSql = Seq("hello world").toDF("t")
       .selectExpr("rolling_hash(t)").as[Long].head()
     val expected = Seq("hello world").toDF("t")
-      .select(TextOps.fingerprintHof($"t")).as[Long].head()
+      .select(HashExprSpec.fingerprintHof($"t")).as[Long].head()
     assert(viaSql === expected)
     val nullRow = Seq(Option.empty[String]).toDF("t")
       .selectExpr("rolling_hash(t)").collect().head
@@ -70,7 +71,7 @@ class HashExprSpec extends SparkSpec {
     val df = (0 until 2000)
       .map(i => s"token$i next$i last$i").toDF("sh")
     val mismatches = df.select(
-        TextOps.fingerprint($"sh").as("a"), TextOps.fingerprintHof($"sh").as("b"))
+        TextOps.fingerprint($"sh").as("a"), HashExprSpec.fingerprintHof($"sh").as("b"))
       .filter($"a" =!= $"b").count()
     assert(mismatches === 0L)
   }
@@ -202,4 +203,15 @@ class HashExprSpec extends SparkSpec {
       assert(e.getMessage.contains("without null elements"), e.getMessage)
     }
   }
+}
+
+object HashExprSpec {
+  /** Reference form of [[TextOps.fingerprint]]: interpreted lambda + one
+    * array slot per character — the cross-check oracle for the native
+    * rolling hash. */
+  def fingerprintHof(text: Column): Column =
+    aggregate(
+      transform(split(text, ""), c => ascii(c).cast("long")),
+      lit(0L),
+      (acc, x) => (acc * 31 + x) % 1000000007L)
 }

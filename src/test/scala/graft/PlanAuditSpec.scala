@@ -756,8 +756,8 @@ class PlanAuditSpec extends SparkSpec {
     // a test JVM that died between saveAsTable and the finally DROP
     // leaves managed-table dirs the fresh in-memory catalog never knew
     // about — saveAsTable then fails on "location already exists" in
-    // every later run. Mirror Bench: clear both the catalog entry and
-    // the surviving warehouse dir BEFORE writing, not only in finally.
+    // every later run. Clear both the catalog entry and the surviving
+    // warehouse dir BEFORE writing, not only in finally.
     val warehouse = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
     Seq("lineitem", "orders", "events", "customer", "documents",
@@ -797,8 +797,8 @@ class PlanAuditSpec extends SparkSpec {
       //   x01 the native overlap-seconds expression's banded join
       //   t05 per-doc simhash fold + pair join legs on doc_id; t13
       //       per-doc feature hash; v06/v23 doc/vec-keyed joins — the
-      //       r20 LayoutAudit finding that overturned the "derived
-      //       keys only" t/v exclusion
+      //       r20 plan-only t/v audit (now Bench's layout section)
+      //       that overturned the "derived keys only" t/v exclusion
       Seq("j04_correlated_count", "r01_coalesce", "j05_self_theta",
         "j07_containment", "r08_merge_spans", "st03_dedup_first",
         "st01_sessionize", "a13_overlap_totals", "e04_timeline_rows",

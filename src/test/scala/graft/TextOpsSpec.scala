@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
@@ -223,7 +224,7 @@ class TextOpsSpec extends SparkSpec {
     Seq((3, 4), (2, 5), (4, 1)).foreach { case (k, w) =>
       val diff = randDocs.select(
         TextOps.winnow($"text", k, w).as("a"),
-        TextOps.winnowHof($"text", k, w).as("b"))
+        TextOpsSpec.winnowHof($"text", k, w).as("b"))
         .filter(not($"a" <=> $"b")).count()
       assert(diff === 0, s"native/HOF winnow divergence at k=$k w=$w")
     }
@@ -353,5 +354,21 @@ class TextOpsSpec extends SparkSpec {
       .select("doc_id", "p_a", "p_b").as[(Long, Int, Int)].collect().toList
     assert(banded.size === banded.distinct.size, "a pair collided twice")
     assert(banded.sorted === naive.sorted)
+  }
+}
+
+object TextOpsSpec {
+  /** Reference form of [[TextOps.winnow]]: interpreted lambda per gram
+    * and per window — the cross-check oracle for the native expression. */
+  def winnowHof(text: Column, k: Int, w: Int): Column = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val grams = Bridge.column(graft.plans.Shingles(Bridge.expression(text), k))
+    val h = transform(grams, g => TextOps.fingerprint(g))
+    val n = size(h)
+    when(n > 0,
+      array_distinct(transform(
+        sequence(lit(1), greatest(n - (w - 1), lit(1))),
+        j => array_min(slice(h, j, lit(w))))))
+      .otherwise(array().cast("array<bigint>"))
   }
 }
